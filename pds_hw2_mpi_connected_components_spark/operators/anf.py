@@ -22,8 +22,7 @@ round is a co-partitioned join + ``groupBy(vid).agg(bit_or(m_i)...)`` —
 pure JVM whole-stage-codegen expressions, no Python in the loop, ONE
 edge-scale exchange per round, and the convergence flag + the round's
 N(h) estimate ride ``DataFrame.observe`` on the round's single
-materializing checkpoint job (the pagerank/BFS action budget). All loop
-state is ``flat_checkpoint``-materialized (plans/flat.py).
+materializing checkpoint job (``Loop.step``, plans/loop.py).
 
 Determinism contract: the per-(vid, trial) hash is a fixed multiplicative
 mix (no Math.random, no xxhash) chosen to be expressible in BOTH Spark
@@ -53,15 +52,12 @@ the compared digits.
 
 from __future__ import annotations
 
-import time
-import warnings
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.adaptive import pick_n_part, shuffle_scope
-from ..plans.flat import flat_checkpoint
+from ..plans.loop import Loop
 from ..sources.graph_build import symmetrize
 
 FM_PHI = 0.77351  # Flajolet-Martin bias correction
@@ -113,129 +109,85 @@ def anf(
     rounds pass without a fixpoint the curve is still emitted (every row
     is a valid N(h) estimate) but the final metrics entry has
     ``converged: False`` and the last row is a lower bound of N(inf);
-    a RuntimeWarning says so.
+    a RuntimeWarning says so. Each hop's metrics row carries ``new_bits``,
+    the number of sketch bits that hop set (0 exactly at the fixpoint).
 
     ``vertices`` (optional) adds isolated vertices (ball = themselves).
     ``directed=False`` symmetrizes first (undirected distances).
     """
     if n_trials < 1 or max_hops < 0:
         raise ValueError("anf(): n_trials >= 1 and max_hops >= 0 required")
-    spark = edges.sparkSession
-    # scale-adaptive layout width + aligned loop exchanges (plans/adaptive.py)
-    n_part = pick_n_part(spark, edges.count() * (1 if directed else 2))
-    with shuffle_scope(spark, n_part):
-        return _anf_impl(spark, n_part, edges, vertices, n_trials, max_hops,
-                         directed)
-
-
-def _anf_impl(
-    spark,
-    n_part: int,
-    edges: DataFrame,
-    vertices: Optional[DataFrame],
-    n_trials: int,
-    max_hops: int,
-    directed: bool,
-) -> tuple[DataFrame, list[dict]]:
     mcols = [f"m{i}" for i in range(n_trials)]
-
     arcs = edges.select(F.col("src").cast("long").alias("src"),
                         F.col("dst").cast("long").alias("dst"))
     if directed:
         arcs = arcs.where(F.col("src") != F.col("dst")).distinct()
     else:
         arcs = symmetrize(arcs)
-    arcs = arcs.repartition(n_part, "dst").transform(flat_checkpoint)
-
-    verts = arcs.select(F.col("src").alias("vid")).union(
-        arcs.select(F.col("dst").alias("vid"))
+    bits_expr = F.coalesce(
+        F.sum(F.expr(" + ".join(f"bit_count(m{i})" for i in range(n_trials)))), F.lit(0)
     )
-    if vertices is not None:
-        verts = verts.union(
-            vertices.select(F.col("vid").cast("long").alias("vid"))
-        )
-    bits_expr = " + ".join(f"bit_count(m{i})" for i in range(n_trials))
-    obs0 = Observation()
-    masks = (
-        verts.distinct()
-        .select("vid", *[F.expr(_init_mask_sql(t)).alias(c)
-                         for t, c in enumerate(mcols)])
-        .observe(obs0,
-                 F.round(F.sum(F.expr(_est_sql(n_trials))), 6).alias("est"),
-                 F.coalesce(F.sum(F.expr(bits_expr)), F.lit(0)).alias("bits"))
-        .repartition(n_part, "vid")
-        .transform(flat_checkpoint)
-    )
-    curve = [float(obs0.get["est"] or 0.0)]
-    prev_bits = int(obs0.get["bits"] or 0)
-    metrics: list[dict] = [
-        {"hop": 0, "n_est": curve[0], "changed": None, "sec": 0.0,
-         "converged": False}
-    ]
+    est_expr = F.round(F.sum(F.expr(_est_sql(n_trials))), 6)
 
-    # convergence via total set-bit count (``bits_expr``, observed on every
-    # materialization): FM bits are only ever OR-ed in, so the popcount is
-    # strictly monotone and "no new bits this hop" IS the sketch fixpoint —
-    # this replaces the old 32-column old-vs-new self-join whose only
-    # purpose was the changed flag (r7; one join and half the per-hop
-    # expression tree removed; the emitted (hop, n_est) rows are
-    # bit-identical, metrics' "changed" now counts newly set sketch bits).
-    converged = False
-    for hop in range(1, max_hops + 1):
-        t0 = time.monotonic()
-        gathered = (
-            arcs.join(masks.hint("shuffle_hash"), arcs.dst == masks.vid)
-            .select(F.col("src").alias("vid"), *mcols)
+    with Loop(edges, 1 if directed else 2, warn=(
+        f"anf() hit max_hops={max_hops} before the sketches reached a "
+        "fixpoint: the curve is valid but its tail is a LOWER bound of N(inf)"
+    )) as loop:
+        arcs = loop.flat(arcs, "dst")
+        verts = arcs.select(F.col("src").alias("vid")).union(
+            arcs.select(F.col("dst").alias("vid"))
         )
-        merged = (
-            masks.select("vid", *mcols)
-            .unionByName(gathered)
-            .groupBy("vid")
-            .agg(*[F.expr(f"bit_or({c})").alias(c) for c in mcols])
-        )
-        obs = Observation()
-        nxt = (
-            merged
-            .observe(
-                obs,
-                F.coalesce(F.sum(F.expr(bits_expr)), F.lit(0)).alias("bits"),
-                F.round(F.sum(F.expr(_est_sql(n_trials))), 6).alias("est"),
+        if vertices is not None:
+            verts = verts.union(
+                vertices.select(F.col("vid").cast("long").alias("vid"))
             )
-            .repartition(n_part, "vid")
-            .transform(flat_checkpoint)
+        masks, row = loop.step(
+            verts.distinct().select("vid", *[F.expr(_init_mask_sql(t)).alias(c)
+                                             for t, c in enumerate(mcols)]),
+            "vid",
+            est=est_expr,
+            bits=bits_expr,
         )
-        bits = int(obs.get["bits"] or 0)
-        n_changed = bits - prev_bits  # newly set sketch bits; 0 <=> fixpoint
-        prev_bits = bits
-        est = float(obs.get["est"] or 0.0)
-        masks = nxt
-        curve.append(est)
-        metrics.append({"hop": hop, "n_est": est, "changed": n_changed,
-                        "sec": round(time.monotonic() - t0, 4),
-                        "converged": False})
-        if n_changed == 0:
-            converged = True
-            break
+        curve = [float(row["est"] or 0.0)]
+        prev_bits = int(row["bits"] or 0)
+        loop.emit(hop=0, n_est=curve[0], new_bits=None)
+
+        # convergence via the total set-bit count, observed on every
+        # materialization: FM bits are only ever OR-ed in, so the popcount
+        # is strictly monotone and "no new bits this hop" IS the sketch
+        # fixpoint — no old-vs-new mask join is needed.
+        for hop in loop.rounds(max_hops + 1, 1):
+            gathered = (
+                arcs.join(masks.hint("shuffle_hash"), arcs.dst == masks.vid)
+                .select(F.col("src").alias("vid"), *mcols)
+            )
+            masks, row = loop.step(
+                masks.select("vid", *mcols)
+                .unionByName(gathered)
+                .groupBy("vid")
+                .agg(*[F.expr(f"bit_or({c})").alias(c) for c in mcols]),
+                "vid",
+                bits=bits_expr,
+                est=est_expr,
+            )
+            bits = int(row["bits"] or 0)
+            new_bits = bits - prev_bits  # newly set sketch bits; 0 <=> fixpoint
+            prev_bits = bits
+            curve.append(float(row["est"] or 0.0))
+            loop.emit(hop=hop, n_est=curve[-1], new_bits=new_bits,
+                      converged=new_bits == 0)
+            if new_bits == 0:
+                break
+        converged = loop.metrics[-1]["converged"]
+        loop.metrics.append({"hop": len(loop.metrics) - 1, "n_est": curve[-1],
+                             "new_bits": None, "sec": 0.0, "converged": converged})
 
     # pad: N(h) is constant past the fixpoint
-    while len(curve) < max_hops + 1:
-        curve.append(curve[-1])
-
-    if not converged:
-        warnings.warn(
-            f"anf() hit max_hops={max_hops} before the sketches reached a "
-            "fixpoint: the curve is valid but its tail is a LOWER bound of "
-            "N(inf) (metrics[-1]['converged'] is False)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    metrics.append({"hop": len(metrics) - 1, "n_est": curve[-1],
-                    "changed": None, "sec": 0.0, "converged": converged})
-
-    out = spark.createDataFrame(
+    curve += [curve[-1]] * (max_hops + 1 - len(curve))
+    out = edges.sparkSession.createDataFrame(
         [(h, v) for h, v in enumerate(curve)], "hop long, n_est double"
     )
-    return out, metrics
+    return out, loop.metrics
 
 
 def effective_diameter(curve: Sequence[float], q: float = 0.9) -> float:

@@ -35,13 +35,13 @@ the per-phase metrics scalars.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.adaptive import pick_n_part, shuffle_scope
-from ..plans.flat import flat_checkpoint
+from ..plans.loop import Loop
 from .paths import bfs_hops
 from .scc import strongly_connected_components
 
@@ -67,159 +67,124 @@ def bowtie(
     arcs, no vertices) returns an empty frame with core = NULL metrics.
     """
     spark = edges.sparkSession
-    # scale-adaptive layout width + aligned exchanges (plans/adaptive.py);
-    # the nested scc/bfs_hops calls size themselves under this ceiling.
-    n_part = pick_n_part(spark, edges.count())
-    with shuffle_scope(spark, n_part):
-        return _bowtie_impl(
-            spark, n_part, edges, vertices, scc_labels, max_iter
-        )
-
-
-def _bowtie_impl(
-    spark,
-    n_part: int,
-    edges: DataFrame,
-    vertices: Optional[DataFrame],
-    scc_labels: Optional[DataFrame],
-    max_iter: int,
-) -> tuple[DataFrame, list[dict]]:
     metrics: list[dict] = []
-
-    arcs = (
-        edges.select(F.col("src").cast("long").alias("src"),
-                     F.col("dst").cast("long").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .repartition(n_part, "src")
-        .transform(flat_checkpoint)
-    )
-
-    if scc_labels is None:
-        scc_labels, scc_metrics = strongly_connected_components(
-            arcs, vertices=vertices, max_iter=max_iter
+    # the nested scc/bfs_hops calls, including the sweep threads below,
+    # inherit this scope's width and conf (plans/loop.py)
+    with Loop(edges) as loop:
+        arcs = loop.flat(
+            edges.select(F.col("src").cast("long").alias("src"),
+                         F.col("dst").cast("long").alias("dst"))
+            .where(F.col("src") != F.col("dst"))
+            .distinct(),
+            "src",
         )
-        metrics.append({"phase": "scc", "rounds": len(scc_metrics),
-                        "converged": bool(scc_metrics[-1]["converged"])})
-    labels = (
-        scc_labels.select(F.col("vid").cast("long").alias("vid"),
-                          F.col("scc").cast("long").alias("scc"))
-        .repartition(n_part, "vid")
-        .transform(flat_checkpoint)
-    )
 
-    # core = largest SCC, ties -> smallest label (deterministic); O(1) rows
-    # cross the driver.
-    top = (
-        labels.groupBy("scc").count()
-        .orderBy(F.desc("count"), F.asc("scc"))
-        .limit(1)
-        .collect()
-    )
-    if not top:
-        empty = spark.createDataFrame([], "vid long, region string, core long")
-        metrics.append({"phase": "done", "core": None, "converged": True})
-        return empty, metrics
-    core_label = int(top[0]["scc"])
-    metrics.append({"phase": "core", "core": core_label,
-                    "core_size": int(top[0]["count"])})
-
-    core = (
-        labels.where(F.col("scc") == core_label)
-        .select("vid")
-        .transform(flat_checkpoint)
-    )
-    rev = arcs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-
-    def _sweep(a: DataFrame, seeds: DataFrame, phase: str,
-               directed: bool = True) -> tuple[DataFrame, dict]:
-        out, m = bfs_hops(a, sources=seeds, max_iter=max_iter,
-                          directed=directed)
-        return out.select("vid"), {
-            "phase": phase, "rounds": len(m),
-            "converged": bool(m[-1]["converged"]),
-        }
-
-    # The three core-seeded sweeps are independent: submit them from a
-    # small thread pool so one sweep's straggler rounds back-fill the
-    # others' idle capacity (guide §2.6). Results/metrics are joined in a
-    # fixed order, so the output is unchanged. (The nested bfs_hops
-    # shuffle_scope conf writes can interleave across threads; that can
-    # only misalign an exchange's partition count — a bounded performance
-    # effect, never a correctness one.)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_fwd = pool.submit(_sweep, arcs, core, "fwd_from_core")
-        f_bwd = pool.submit(_sweep, rev, core, "bwd_to_core")
-        f_weak = pool.submit(_sweep, arcs, core, "weak_component", False)
-        fwd, m_fwd = f_fwd.result()    # core ∪ OUT ∪ deeper
-        bwd, m_bwd = f_bwd.result()    # core ∪ IN
-        weak, m_weak = f_weak.result()
-    metrics += [m_fwd, m_bwd, m_weak]
-
-    # IN/OUT sets: the emptiness scalars ride the materializing jobs as
-    # observed metrics instead of separate limit(1).count() actions.
-    in_obs, out_obs = Observation(), Observation()
-    in_set = (
-        bwd.join(core, "vid", "left_anti")
-        .observe(in_obs, F.count("*").alias("n"))
-        .transform(flat_checkpoint)
-    )
-    out_set = (
-        fwd.join(core, "vid", "left_anti")
-        .observe(out_obs, F.count("*").alias("n"))
-        .transform(flat_checkpoint)
-    )
-    n_in, n_out = int(in_obs.get["n"] or 0), int(out_obs.get["n"] or 0)
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_fi = pool.submit(_sweep, arcs, in_set, "fwd_from_in") \
-            if n_in else None
-        f_to = pool.submit(_sweep, rev, out_set, "bwd_to_out") \
-            if n_out else None
-        if f_fi:
-            from_in, m_fi = f_fi.result()
-            metrics.append(m_fi)
-        else:
-            from_in = spark.createDataFrame([], "vid long")
-        if f_to:
-            to_out, m_to = f_to.result()
-            metrics.append(m_to)
-        else:
-            to_out = spark.createDataFrame([], "vid long")
-
-    # assembly: all flat hash(vid) statics -> co-partitioned left joins;
-    # precedence CORE > IN > OUT > (TUBE|TENDRIL within weak) > DISC
-    def _flag(df: DataFrame, name: str) -> DataFrame:
-        return df.select("vid", F.lit(1).alias(name)).repartition(n_part, "vid")
-
-    base = labels.select("vid")
-    if vertices is not None:
-        base = (
-            vertices.select(F.col("vid").cast("long").alias("vid")).distinct()
-            .unionByName(base).distinct()
-            .repartition(n_part, "vid")
-        )
-    out = (
-        base
-        .join(_flag(core, "c"), "vid", "left")
-        .join(_flag(in_set, "i"), "vid", "left")
-        .join(_flag(out_set, "o"), "vid", "left")
-        .join(_flag(weak, "w"), "vid", "left")
-        .join(_flag(from_in, "fi"), "vid", "left")
-        .join(_flag(to_out, "to"), "vid", "left")
-        .select(
+        if scc_labels is None:
+            scc_labels, scc_metrics = strongly_connected_components(
+                arcs, vertices=vertices, max_iter=max_iter
+            )
+            metrics.append({"phase": "scc", "rounds": len(scc_metrics),
+                            "converged": bool(scc_metrics[-1]["converged"])})
+        labels = loop.flat(
+            scc_labels.select(F.col("vid").cast("long").alias("vid"),
+                              F.col("scc").cast("long").alias("scc")),
             "vid",
-            F.when(F.col("c") == 1, "CORE")
-            .when(F.col("i") == 1, "IN")
-            .when(F.col("o") == 1, "OUT")
-            .when(F.col("w").isNull(), "DISC")
-            .when((F.col("fi") == 1) & (F.col("to") == 1), "TUBE")
-            .otherwise("TENDRIL")
-            .alias("region"),
-            F.lit(core_label).cast("long").alias("core"),
         )
-    )
+
+        # core = largest SCC, ties -> smallest label (deterministic); O(1) rows
+        # cross the driver.
+        top = (
+            labels.groupBy("scc").count()
+            .orderBy(F.desc("count"), F.asc("scc"))
+            .limit(1)
+            .collect()
+        )
+        if not top:
+            empty = spark.createDataFrame([], "vid long, region string, core long")
+            metrics.append({"phase": "done", "core": None, "converged": True})
+            return empty, metrics
+        core_label = int(top[0]["scc"])
+        metrics.append({"phase": "core", "core": core_label,
+                        "core_size": int(top[0]["count"])})
+
+        core = loop.flat(labels.where(F.col("scc") == core_label).select("vid"))
+        rev = arcs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+
+        def _sweep(a: DataFrame, seeds: DataFrame, phase: str,
+                   directed: bool = True) -> tuple[DataFrame, dict]:
+            out, m = bfs_hops(a, sources=seeds, max_iter=max_iter,
+                              directed=directed)
+            return out.select("vid"), {
+                "phase": phase, "rounds": len(m),
+                "converged": bool(m[-1]["converged"]),
+            }
+
+        # The three core-seeded sweeps are independent: submit them from a
+        # small thread pool so one sweep's straggler rounds back-fill the
+        # others' idle capacity. Results/metrics are joined in a
+        # fixed order, so the output is unchanged.
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            f_fwd = pool.submit(_sweep, arcs, core, "fwd_from_core")
+            f_bwd = pool.submit(_sweep, rev, core, "bwd_to_core")
+            f_weak = pool.submit(_sweep, arcs, core, "weak_component", False)
+            fwd, m_fwd = f_fwd.result()    # core ∪ OUT ∪ deeper
+            bwd, m_bwd = f_bwd.result()    # core ∪ IN
+            weak, m_weak = f_weak.result()
+        metrics += [m_fwd, m_bwd, m_weak]
+
+        # IN/OUT sets: the emptiness scalars ride the materializing jobs as
+        # observed metrics instead of separate limit(1).count() actions.
+        in_set, in_row = loop.step(bwd.join(core, "vid", "left_anti"), n=F.count("*"))
+        out_set, out_row = loop.step(fwd.join(core, "vid", "left_anti"), n=F.count("*"))
+        n_in, n_out = int(in_row["n"] or 0), int(out_row["n"] or 0)
+
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            f_fi = pool.submit(_sweep, arcs, in_set, "fwd_from_in") \
+                if n_in else None
+            f_to = pool.submit(_sweep, rev, out_set, "bwd_to_out") \
+                if n_out else None
+            if f_fi:
+                from_in, m_fi = f_fi.result()
+                metrics.append(m_fi)
+            else:
+                from_in = spark.createDataFrame([], "vid long")
+            if f_to:
+                to_out, m_to = f_to.result()
+                metrics.append(m_to)
+            else:
+                to_out = spark.createDataFrame([], "vid long")
+
+        # assembly: all flat hash(vid) statics -> co-partitioned left joins;
+        # precedence CORE > IN > OUT > (TUBE|TENDRIL within weak) > DISC
+        def _flag(df: DataFrame, name: str) -> DataFrame:
+            return df.select("vid", F.lit(1).alias(name)).repartition(loop.n_part, "vid")
+
+        base = labels.select("vid")
+        if vertices is not None:
+            base = (
+                vertices.select(F.col("vid").cast("long").alias("vid")).distinct()
+                .unionByName(base).distinct()
+                .repartition(loop.n_part, "vid")
+            )
+        out = (
+            base
+            .join(_flag(core, "c"), "vid", "left")
+            .join(_flag(in_set, "i"), "vid", "left")
+            .join(_flag(out_set, "o"), "vid", "left")
+            .join(_flag(weak, "w"), "vid", "left")
+            .join(_flag(from_in, "fi"), "vid", "left")
+            .join(_flag(to_out, "to"), "vid", "left")
+            .select(
+                "vid",
+                F.when(F.col("c") == 1, "CORE")
+                .when(F.col("i") == 1, "IN")
+                .when(F.col("o") == 1, "OUT")
+                .when(F.col("w").isNull(), "DISC")
+                .when((F.col("fi") == 1) & (F.col("to") == 1), "TUBE")
+                .otherwise("TENDRIL")
+                .alias("region"),
+                F.lit(core_label).cast("long").alias("core"),
+            )
+        )
     metrics.append({"phase": "done", "core": core_label, "converged": True})
     return out, metrics

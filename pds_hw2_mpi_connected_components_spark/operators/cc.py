@@ -23,15 +23,13 @@ property, benchmark.c:275-284).
 
 from __future__ import annotations
 
-import time
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.adaptive import pick_n_part, shuffle_scope
 from ..plans.checkpoint import CheckpointStore
-from ..plans.flat import flat_checkpoint
+from ..plans.loop import Loop
 
 MAX_ROUNDS = 100  # safety cap, analog of MAX_ITER=512 (connected_components.c:103)
 
@@ -130,25 +128,6 @@ def connected_components(
     (exact — min is associative; output is identical, tested); 0 = rely on
     AQE skew handling alone.
     """
-    spark = edges.sparkSession
-    # scale-adaptive shuffle width for the star rounds (plans/adaptive.py);
-    # AQE stays ON here: star rounds build fresh distinct/agg shapes over a
-    # shrinking edge set each round, which AQE's coalescing genuinely helps
-    with shuffle_scope(spark, pick_n_part(spark, edges.count() * 2),
-                       disable_aqe=False):
-        return _cc_impl(
-            spark, edges, vertices, checkpoint, max_rounds, salt_buckets
-        )
-
-
-def _cc_impl(
-    spark,
-    edges: DataFrame,
-    vertices: Optional[DataFrame],
-    checkpoint: Optional[CheckpointStore],
-    max_rounds: int,
-    salt_buckets: int,
-) -> tuple[DataFrame, list[dict]]:
     e = (
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .where(F.col("u") != F.col("v"))
@@ -165,43 +144,33 @@ def _cc_impl(
             prev_sum = tuple(prev_sum) if prev_sum else None
             start_round += 1
 
-    if prev_sum is None:
-        e = e.transform(flat_checkpoint)
-        prev_sum = _checksum(e)
-
-    metrics: list[dict] = []
-    for rnd in range(start_round, max_rounds):
-        t0 = time.monotonic()
-        nxt = _small_star(_large_star(e, salt_buckets), salt_buckets)
-        if checkpoint is not None:
-            nxt = checkpoint.write("cc_edges", rnd, nxt,
-                                   meta={"checksum": None})  # checksum patched below
-            cur_sum = _checksum(nxt)
-        else:
-            # checksum rides the checkpoint materialization as observed
-            # metrics — one action per round, not two (guide §1.5)
-            obs = Observation()
-            nxt = nxt.observe(
-                obs,
-                F.count("*").alias("n"),
-                F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-            ).transform(flat_checkpoint)
-            row = obs.get
-            cur_sum = (row["n"], row["h"])
-        changed = cur_sum != prev_sum
-        dt = time.monotonic() - t0
-        metrics.append(
-            {"round": rnd, "edges": cur_sum[0], "changed": changed, "sec": dt}
-        )
-        if checkpoint is not None:
-            checkpoint.patch_meta("cc_edges", rnd, {"checksum": list(cur_sum)})
-            checkpoint.log_metrics("cc", metrics[-1])
-        if not changed:
+    # AQE stays on: the star rounds' fresh distinct/agg shapes over a
+    # shrinking edge set gain from its coalescing (plans/loop.py)
+    with Loop(edges, 2, keep_aqe=True,
+              fail=f"CC did not converge in {max_rounds} rounds") as loop:
+        if prev_sum is None:
+            e = loop.flat(e)
+            prev_sum = _checksum(e)
+        for rnd in loop.rounds(max_rounds, start_round):
+            nxt = _small_star(_large_star(e, salt_buckets), salt_buckets)
+            if checkpoint is not None:
+                nxt = checkpoint.write("cc_edges", rnd, nxt,
+                                       meta={"checksum": None})  # checksum patched below
+                cur_sum = _checksum(nxt)
+            else:
+                nxt, row = loop.step(nxt, n=F.count("*"),
+                                     h=F.bit_xor(F.xxhash64("u", "v")))
+                cur_sum = (row["n"], row["h"])
+            changed = cur_sum != prev_sum
+            m = loop.emit(round=rnd, edges=cur_sum[0], changed=changed,
+                          converged=not changed)
+            if checkpoint is not None:
+                checkpoint.patch_meta("cc_edges", rnd, {"checksum": list(cur_sum)})
+                checkpoint.log_metrics("cc", m)
             e = nxt
-            break
-        e, prev_sum = nxt, cur_sum
-    else:
-        raise RuntimeError(f"CC did not converge in {max_rounds} rounds")
+            if not changed:
+                break
+            prev_sum = cur_sum
 
     # At the fixpoint, e is a star forest: (child, root) with root = component
     # min. Roots/isolates label themselves.
@@ -218,7 +187,7 @@ def _cc_impl(
         universe.join(labels_from_edges, "vid", "left")
         .select("vid", F.coalesce("label", F.col("vid")).alias("label"))
     )
-    return labels, metrics
+    return labels, loop.metrics
 
 
 def cc_count(labels: DataFrame) -> int:

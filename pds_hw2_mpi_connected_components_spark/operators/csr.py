@@ -39,7 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.adaptive import pick_n_part
+from ..plans.loop import width
 
 
 def pack_by_dst(edges: DataFrame, n_part: Optional[int] = None) -> DataFrame:
@@ -117,8 +117,7 @@ def pagerank_csr(
 
     # scale-adaptive partition count: every superstep launches one Python
     # worker task per packed partition, so idle fan-out is pure overhead
-    # (plans/adaptive.py)
-    packed = pack_by_dst(edges, pick_n_part(spark, edges.count()))
+    packed = pack_by_dst(edges, width(edges))
     deg_pdf = edges.groupBy("src").agg(F.count("*").alias("out_deg")).toPandas()
     out_deg = np.zeros(size, dtype=np.float64)
     out_deg[deg_pdf["src"].to_numpy()] = deg_pdf["out_deg"].to_numpy()
@@ -176,7 +175,7 @@ def connected_components_csr(
         return spark.createDataFrame([], "vid long, label long"), []
     size = int(vids[-1]) + 1
 
-    packed = pack_by_dst(sym, pick_n_part(spark, edges.count() * 2))
+    packed = pack_by_dst(sym, width(edges, 2))
     label = np.full(size, np.iinfo(np.int64).max, dtype=np.int64)
     label[vids] = vids
 

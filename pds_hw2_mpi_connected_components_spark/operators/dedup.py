@@ -24,8 +24,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint_md5, portable_token_hash
-from ..plans.adaptive import pick_n_part, shuffle_scope
 from ..plans.flat import flat_checkpoint
+from ..plans.loop import Loop
 
 P = 2147483647  # Mersenne prime 2^31-1; universal-hash modulus
 
@@ -111,9 +111,11 @@ def jaccard_pairs(
     ``stats["dropped_tokens"]`` / ``stats["max_token_df"]`` are filled; a
     RuntimeWarning is emitted if the cutoff actually dropped tokens, so
     exact-semantics callers notice they need ``max_df=None``. Default None
-    keeps the operator fully lazy (the cutoff applies silently in-plan)."""
-    spark = df.sparkSession
-    n_part = pick_n_part(spark, df.count())
+    applies the cutoff silently in-plan.
+
+    Not lazy: the call counts ``df`` (to size the layout, plans/loop.py)
+    and materializes the blocked token table once, so ``df`` is scanned
+    at call time; the returned pairs DataFrame is lazy."""
     toks = tokens(df, id_col, text_col) if ngram <= 1 else shingles(df, ngram, id_col, text_col)
     if max_df is not None:
         dfreq = toks.groupBy("tok").agg(F.count("*").alias("df"))
@@ -141,12 +143,8 @@ def jaccard_pairs(
     # key, so the tokenize/df-filter subtree runs once instead of three
     # times and the self-join is exchange-free (guide §2.4/§8; values are
     # unchanged — this is pure plan structure).
-    with shuffle_scope(spark, n_part):
-        t = (
-            toks.join(blocks, "id")
-            .repartition(n_part, "tok", "blk")
-            .transform(flat_checkpoint)
-        )
+    with Loop(df) as loop:
+        t = loop.flat(toks.join(blocks, "id"), "tok", "blk")
         sizes = t.groupBy("id").agg(F.count("*").alias("sz"))
         pairs = (
             t.alias("x").join(t.alias("y"),
@@ -245,22 +243,21 @@ def minhash_lsh_candidates(
     ``max_bucket`` (default 10k, ``None`` to opt out) drops band buckets
     larger than the cap before the self-join — see :func:`cap_hot_buckets`.
     Without it a degenerate band (all near-empty docs sharing one
-    signature) makes one bucket quadratic at web scale."""
-    spark = df.sparkSession
-    n_part = pick_n_part(spark, df.count())
+    signature) makes one bucket quadratic at web scale. Like
+    :func:`jaccard_pairs`, the call counts ``df`` and materializes the band
+    table; the returned candidates are lazy."""
     sig = minhash_signatures(df, id_col, text_col)
     # the band table feeds the bucket-size guard AND both sides of the
     # candidate self-join: materialize ONCE on the collision key so the
     # signature computation runs once and the self-join is exchange-free
     # (values unchanged — plan structure only)
-    with shuffle_scope(spark, n_part):
-        bands = (
+    with Loop(df) as loop:
+        bands = loop.flat(
             sig.withColumn("band", (F.col("i") / rows_per_band).cast("int"))
             .groupBy("id", "band")
             .agg(F.concat_ws(",", F.sort_array(F.collect_list(
-                F.format_string("%d:%d", F.col("i"), F.col("mh"))))).alias("bkey"))
-            .repartition(n_part, "band", "bkey")
-            .transform(flat_checkpoint)
+                F.format_string("%d:%d", F.col("i"), F.col("mh"))))).alias("bkey")),
+            "band", "bkey",
         )
     bands = cap_hot_buckets(bands, ["band", "bkey"], max_bucket, stats,
                             "minhash_lsh_candidates")

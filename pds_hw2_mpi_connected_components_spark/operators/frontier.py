@@ -38,18 +38,16 @@ documented trade-off elsewhere.
 
 from __future__ import annotations
 
-import time
 from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import CheckpointStore
+from ..plans.loop import Loop
 from .csr import pack_by_dst
-from ..plans.adaptive import pick_n_part, shuffle_scope
-from ..plans.flat import flat_checkpoint
 
 MAX_ROUNDS = 512  # reference MAX_ITER (connected_components.c:103)
 
@@ -69,32 +67,12 @@ def connected_components_frontier(
     broadcast — tune to executor memory. ``checkpoint``: persists
     (labels, frontier) per round so a killed run resumes mid-iteration,
     same contract as the other two CC modes."""
-    spark = edges.sparkSession
-    # scale-adaptive layout width + aligned loop exchanges (plans/adaptive.py)
-    n_part = pick_n_part(spark, edges.count() * 2)
-    with shuffle_scope(spark, n_part):
-        return _cc_frontier_impl(
-            spark, n_part, edges, vertices, max_rounds,
-            broadcast_threshold, checkpoint,
-        )
-
-
-def _cc_frontier_impl(
-    spark,
-    n_part: int,
-    edges: DataFrame,
-    vertices: Optional[DataFrame],
-    max_rounds: int,
-    broadcast_threshold: int,
-    checkpoint: Optional[CheckpointStore],
-) -> tuple[DataFrame, list[dict]]:
     sym = (
         edges.select("src", "dst")
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    packed = pack_by_dst(sym, n_part)  # hash(dst), sorted (dst, src), persisted
     if vertices is None:
         universe = (
             edges.select(F.col("src").alias("vid"))
@@ -103,96 +81,80 @@ def _cc_frontier_impl(
         )
     else:
         universe = vertices.select("vid")
-    labels = (
-        universe.select("vid", F.col("vid").alias("label"))
-        .repartition(n_part, "vid")
-        .transform(flat_checkpoint)
-    )
-    # round 0 frontier = every vertex (conceptually); executed distributed.
-    frontier_df: Optional[DataFrame] = None  # None => "all of labels"
-    frontier_rows = labels.count()
-    start_round = 0
-    if checkpoint is not None:
-        resumed = checkpoint.latest("frontier_labels")
-        if resumed is not None:
-            start_round, labels = resumed
-            labels = labels.repartition(n_part, "vid").transform(flat_checkpoint)
-            # the frontier of the SAME round (labels are written after the
-            # frontier, so a committed labels round implies a committed
-            # frontier round)
-            frontier_df = checkpoint.read("frontier_changed", start_round)
-            frontier_df = frontier_df.repartition(n_part, "vid").transform(flat_checkpoint)
-            frontier_rows = frontier_df.count()
-            start_round += 1
-            if frontier_rows == 0:  # crashed after converging round
-                packed.unpersist()
-                return labels, []
+    with Loop(edges, 2, fail=f"frontier CC did not converge in {max_rounds} rounds") as loop:
+        packed = pack_by_dst(sym, loop.n_part)  # hash(dst), sorted (dst, src), persisted
+        labels = loop.flat(universe.select("vid", F.col("vid").alias("label")), "vid")
+        # round 0 frontier = every vertex (conceptually); executed distributed.
+        frontier_df: Optional[DataFrame] = None  # None => "all of labels"
+        frontier_rows = labels.count()
+        start_round = 0
+        if checkpoint is not None:
+            resumed = checkpoint.latest("frontier_labels")
+            if resumed is not None:
+                start_round, labels = resumed
+                labels = loop.flat(labels, "vid")
+                # the frontier of the SAME round (labels are written after the
+                # frontier, so a committed labels round implies a committed
+                # frontier round)
+                frontier_df = loop.flat(checkpoint.read("frontier_changed", start_round), "vid")
+                frontier_rows = frontier_df.count()
+                start_round += 1
+                if frontier_rows == 0:  # crashed after converging round
+                    packed.unpersist()
+                    return labels, []
 
-    metrics: list[dict] = []
-    for rnd in range(start_round, max_rounds):
-        t0 = time.monotonic()
-        broadcast_mode = frontier_rows <= broadcast_threshold and frontier_df is not None
-        if broadcast_mode:
-            cand = _gather_broadcast(packed, frontier_df)
-        else:
-            src_labels = frontier_df if frontier_df is not None else labels
-            cand = (
-                packed.join(
-                    src_labels.hint("shuffle_hash"), packed.src == src_labels.vid
+        for rnd in loop.rounds(max_rounds, start_round):
+            broadcast_mode = frontier_rows <= broadcast_threshold and frontier_df is not None
+            if broadcast_mode:
+                cand = _gather_broadcast(packed, frontier_df)
+            else:
+                src_labels = frontier_df if frontier_df is not None else labels
+                cand = (
+                    packed.join(
+                        src_labels.hint("shuffle_hash"), packed.src == src_labels.vid
+                    )
+                    .groupBy("dst")
+                    .agg(F.min("label").alias("cand"))
                 )
-                .groupBy("dst")
-                .agg(F.min("label").alias("cand"))
-            )
-        # co-partitioned: labels hash(vid), cand hash(dst) — both by join key.
-        # Materialized ONCE per round: new_labels and the frontier are both
-        # cheap projections/filters over this flat LogicalRDD, so the
-        # edge-scale candidate computation runs exactly once per round (it
-        # used to run twice — one localCheckpoint each).
-        obs = Observation()
-        joined = (
-            labels.join(cand.hint("shuffle_hash"), labels.vid == cand.dst, "left")
-            .select(
+            # co-partitioned: labels hash(vid), cand hash(dst) — both by join
+            # key. Materialized ONCE per round: new_labels and the frontier
+            # are both cheap projections/filters over this flat LogicalRDD,
+            # so the edge-scale candidate computation runs once per round.
+            joined, row = loop.step(
+                labels.join(cand.hint("shuffle_hash"), labels.vid == cand.dst, "left")
+                .select(
+                    "vid",
+                    "label",
+                    F.when(F.col("cand") < F.col("label"), F.col("cand"))
+                    .otherwise(F.col("label"))
+                    .alias("new_label"),
+                ),
                 "vid",
-                "label",
-                F.when(F.col("cand") < F.col("label"), F.col("cand"))
-                .otherwise(F.col("label"))
-                .alias("new_label"),
-            )
-            .observe(
-                obs,
-                F.coalesce(
+                changed=F.coalesce(
                     F.sum((F.col("new_label") < F.col("label")).cast("long")),
                     F.lit(0),
-                ).alias("changed"),
+                ),
             )
-            .repartition(n_part, "vid")
-            .transform(flat_checkpoint)
-        )
-        new_labels = joined.select("vid", F.col("new_label").alias("label"))
-        frontier_df = joined.where(F.col("new_label") < F.col("label")).select(
-            "vid", F.col("new_label").alias("label")
-        )
-        # changed count rides the round's checkpoint as an observed metric
-        # — ONE action per round (guide §1.5)
-        frontier_rows = int(obs.get["changed"] or 0)
-        labels = new_labels
-        metrics.append({
-            "round": rnd,
-            "changed": frontier_rows,
-            "mode": "broadcast" if broadcast_mode else "join",
-            "sec": time.monotonic() - t0,
-        })
-        if checkpoint is not None:
-            checkpoint.write("frontier_changed", rnd, frontier_df, rows=frontier_rows)
-            checkpoint.write("frontier_labels", rnd, labels,
-                             meta={"changed": frontier_rows})
-            checkpoint.log_metrics("frontier_cc", metrics[-1])
-        if frontier_rows == 0:
-            break
-    else:
-        raise RuntimeError(f"frontier CC did not converge in {max_rounds} rounds")
+            labels = joined.select("vid", F.col("new_label").alias("label"))
+            frontier_df = joined.where(F.col("new_label") < F.col("label")).select(
+                "vid", F.col("new_label").alias("label")
+            )
+            frontier_rows = int(row["changed"] or 0)
+            m = loop.emit(
+                round=rnd,
+                changed=frontier_rows,
+                mode="broadcast" if broadcast_mode else "join",
+                converged=frontier_rows == 0,
+            )
+            if checkpoint is not None:
+                checkpoint.write("frontier_changed", rnd, frontier_df, rows=frontier_rows)
+                checkpoint.write("frontier_labels", rnd, labels,
+                                 meta={"changed": frontier_rows})
+                checkpoint.log_metrics("frontier_cc", m)
+            if frontier_rows == 0:
+                break
     packed.unpersist()
-    return labels, metrics
+    return labels, loop.metrics
 
 
 def _gather_broadcast(packed: DataFrame, frontier_df: DataFrame) -> DataFrame:

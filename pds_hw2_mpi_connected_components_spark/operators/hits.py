@@ -41,13 +41,12 @@ the plan stays off the shuffle path:
 from __future__ import annotations
 
 import math
-import time
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from ..plans.adaptive import pick_n_part, shuffle_scope
-from ..plans.flat import flat_checkpoint
+
+from ..plans.loop import Loop
 
 #: Spark jobs per iteration — the two half-step materializations; norms and
 #: the convergence delta are observed metrics on those same jobs.
@@ -111,115 +110,81 @@ def hits(
     """
     if max_iter < 1:
         raise ValueError(f"hits() requires max_iter >= 1, got {max_iter}")
-    spark = edges.sparkSession
-    # scale-adaptive layout width + aligned loop exchanges (plans/adaptive.py)
-    n_part = pick_n_part(spark, edges.count())
-    with shuffle_scope(spark, n_part):
-        return _hits_impl(spark, n_part, edges, vertices, tol, max_iter)
-
-
-def _hits_impl(
-    spark,
-    n_part: int,
-    edges: DataFrame,
-    vertices: Optional[DataFrame],
-    tol: float,
-    max_iter: int,
-) -> tuple[DataFrame, list[dict]]:
     if vertices is None:
         vertices = (
             edges.select(F.col("src").alias("vid"))
             .union(edges.select(F.col("dst").alias("vid")))
             .distinct()
         )
-    vertices = (
-        vertices.select("vid").repartition(n_part, "vid").transform(flat_checkpoint)
-    )
-    n = vertices.count()
-    if n == 0:
-        return vertices.select(
-            "vid", F.lit(0.0).alias("auth"), F.lit(0.0).alias("hub")
-        ), []
-
-    e_by_src = (
-        edges.select("src", "dst")
-        .repartition(n_part, "src")
-        .transform(flat_checkpoint)
-    )
-    e_by_dst = e_by_src.repartition(n_part, "dst").transform(flat_checkpoint)
-
-    # hub_0 = 1 for every vertex, pre-normalized (norm = sqrt(n), exact here)
-    inv = 1.0 / math.sqrt(float(n))
-    hubs = vertices.select("vid", F.lit(inv).alias("hub"))
-    hub_scale = 1.0  # lazy 1/||.|| multiplier for the CURRENT hubs table
-    auth_scale = 1.0
-    # previous iteration's UNnormalized auth vector + its scale (the delta
-    # baseline; product applied lazily, bit-identical to materializing it)
-    prev: Optional[tuple[DataFrame, float]] = None
-
-    metrics: list[dict] = []
-    for it in range(max_iter):
-        t0 = time.monotonic()
-        # ---- auth half-step: norm observed on the materializing job -----
-        a_obs = Observation()
-        auths = (
-            auth_half_step(vertices, e_by_src, hubs, hub_scale)
-            .observe(a_obs, F.sum(F.col("auth") * F.col("auth")).alias("ss"))
-            .repartition(n_part, "vid")
-            .transform(flat_checkpoint)
-        )
-        a_norm = math.sqrt(a_obs.get["ss"] or 0.0)
-        if a_norm == 0.0:
-            # no edges at all: auth == hub == 0 everywhere, done
-            zero = vertices.select(
+    with Loop(edges) as loop:
+        vertices = loop.flat(vertices.select("vid"), "vid")
+        n = vertices.count()
+        if n == 0:
+            return vertices.select(
                 "vid", F.lit(0.0).alias("auth"), F.lit(0.0).alias("hub")
-            )
-            metrics.append({"iter": it, "l1_delta": 0.0, "sec": time.monotonic() - t0})
-            return zero, metrics
-        auth_scale = 1.0 / a_norm
+            ), []
 
-        # ---- hub half-step: norm (+ auth L1 delta vs the previous
-        # iteration) observed on the materializing job; the auths / prev
-        # joins are hash(vid)-co-partitioned, so they add no exchange ------
-        h_obs = Observation()
-        hub_plan = hub_half_step(vertices, e_by_dst, auths, auth_scale)
-        if prev is not None:
-            pa_df, pa_scale = prev
-            hub_plan = (
-                hub_plan.join(auths.hint("shuffle_hash"), "vid")
-                .join(
-                    pa_df.hint("shuffle_hash").select(
-                        "vid", F.col("auth").alias("pa")
+        e_by_src = loop.flat(edges.select("src", "dst"), "src")
+        e_by_dst = loop.flat(e_by_src, "dst")
+
+        # hub_0 = 1 for every vertex, pre-normalized (norm = sqrt(n), exact here)
+        inv = 1.0 / math.sqrt(float(n))
+        hubs = vertices.select("vid", F.lit(inv).alias("hub"))
+        hub_scale = 1.0  # lazy 1/||.|| multiplier for the CURRENT hubs table
+        auth_scale = 1.0
+        # previous iteration's UNnormalized auth vector + its scale (the delta
+        # baseline; product applied lazily, bit-identical to materializing it)
+        prev: Optional[tuple[DataFrame, float]] = None
+
+        for it in loop.rounds(max_iter):
+            # ---- auth half-step: norm observed on the materializing job ---
+            auths, row = loop.step(
+                auth_half_step(vertices, e_by_src, hubs, hub_scale), "vid",
+                ss=F.sum(F.col("auth") * F.col("auth")),
+            )
+            a_norm = math.sqrt(row["ss"] or 0.0)
+            if a_norm == 0.0:
+                # no edges at all: auth == hub == 0 everywhere, done
+                loop.emit(iter=it, l1_delta=0.0, converged=True)
+                return vertices.select(
+                    "vid", F.lit(0.0).alias("auth"), F.lit(0.0).alias("hub")
+                ), loop.metrics
+            auth_scale = 1.0 / a_norm
+
+            # ---- hub half-step: norm (+ auth L1 delta vs the previous
+            # iteration) observed on the materializing job; the auths / prev
+            # joins are hash(vid)-co-partitioned, so they add no exchange ---
+            hub_plan = hub_half_step(vertices, e_by_dst, auths, auth_scale)
+            hh = F.sum(F.col("hub") * F.col("hub"))
+            if prev is not None:
+                pa_df, pa_scale = prev
+                hubs, row = loop.step(
+                    hub_plan.join(auths.hint("shuffle_hash"), "vid")
+                    .join(
+                        pa_df.hint("shuffle_hash").select(
+                            "vid", F.col("auth").alias("pa")
+                        ),
+                        "vid",
                     ),
                     "vid",
-                )
-                .observe(
-                    h_obs,
-                    F.sum(F.col("hub") * F.col("hub")).alias("hh"),
-                    F.sum(
+                    keep=("vid", "hub"),
+                    hh=hh,
+                    delta=F.sum(
                         F.abs(
                             F.col("auth") * F.lit(auth_scale)
                             - F.col("pa") * F.lit(pa_scale)
                         )
-                    ).alias("delta"),
+                    ),
                 )
-                .select("vid", "hub")
-            )
-        else:
-            hub_plan = hub_plan.observe(
-                h_obs, F.sum(F.col("hub") * F.col("hub")).alias("hh")
-            )
-        new_hubs = hub_plan.repartition(n_part, "vid").transform(flat_checkpoint)
-        m = h_obs.get
-        h_norm = math.sqrt(m["hh"] or 0.0)
-        delta = m["delta"] if prev is not None else float("inf")
-        hub_scale = 1.0 / h_norm if h_norm else 1.0
-        hubs = new_hubs
-        prev = (auths, auth_scale)
-        dt = time.monotonic() - t0
-        metrics.append({"iter": it, "l1_delta": delta, "sec": dt})
-        if delta < tol:
-            break
+            else:
+                hubs, row = loop.step(hub_plan, "vid", hh=hh)
+            h_norm = math.sqrt(row["hh"] or 0.0)
+            delta = row["delta"] if prev is not None else float("inf")
+            hub_scale = 1.0 / h_norm if h_norm else 1.0
+            prev = (auths, auth_scale)
+            loop.emit(iter=it, l1_delta=delta, converged=delta < tol)
+            if delta < tol:
+                break
 
     pa_df, pa_scale = prev
     out = (
@@ -229,4 +194,4 @@ def _hits_impl(
         )
         .select("vid", "auth", "hub")
     )
-    return out, metrics
+    return out, loop.metrics

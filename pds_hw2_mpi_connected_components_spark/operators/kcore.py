@@ -41,16 +41,14 @@ ever replicated or collected to the driver beyond O(1) scalars.
 
 from __future__ import annotations
 
-import time
-import warnings
+from functools import reduce
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.adaptive import pick_n_part, shuffle_scope
+from ..plans.loop import Loop
 from ..sources.graph_build import symmetrize
-from ..plans.flat import flat_checkpoint
 
 
 def k_core(
@@ -65,67 +63,38 @@ def k_core(
     out before the peel fixpoint, the result is a SUPERSET of the true
     k-core — the final entry then has ``converged: False`` and a
     RuntimeWarning is emitted."""
-    spark = edges.sparkSession
-    # scale-adaptive layout width + aligned loop exchanges (plans/adaptive.py);
-    # sized on the directed input (the symmetrized table is <= 2x that)
-    n_part = pick_n_part(spark, edges.count() * 2)
-    with shuffle_scope(spark, n_part):
-        return _k_core_impl(spark, n_part, edges, k, max_iter)
-
-
-def _k_core_impl(
-    spark, n_part: int, edges: DataFrame, k: int, max_iter: int
-) -> tuple[DataFrame, list[dict]]:
-    sym_obs = Observation()
-    sym = (
-        symmetrize(edges.select("src", "dst"))
-        .observe(sym_obs, F.count("*").alias("n"))
-        .repartition(n_part, "src")
-        .transform(flat_checkpoint)
-    )
-    metrics: list[dict] = []
-    n_edges = int(sym_obs.get["n"] or 0)
-    for it in range(max_iter):
-        t0 = time.monotonic()
-        # sym is symmetric, so out-degree on src IS the undirected degree
-        survivors = (
-            sym.groupBy("src").agg(F.count("*").alias("deg"))
-            .where(F.col("deg") >= k)
-            .select(F.col("src").alias("vid"))
-        )
-        # surviving-edge count rides the checkpoint materialization as an
-        # observed metric — ONE action per round (guide §1.5)
-        obs = Observation()
-        new_sym = (
-            sym.join(survivors.hint("shuffle_hash"), sym.src == survivors.vid, "left_semi")
-            .repartition(n_part, "dst")
-            .join(
-                survivors.hint("shuffle_hash"),
-                F.col("dst") == survivors.vid,
-                "left_semi",
+    with Loop(edges, 2, warn=(
+        f"k_core(k={k}) hit max_iter={max_iter} before the peel fixpoint: "
+        "the returned vertex set is a superset of the true k-core"
+    )) as loop:
+        sym, row = loop.step(symmetrize(edges.select("src", "dst")), "src",
+                             n=F.count("*"))
+        n_edges = int(row["n"] or 0)
+        for it in loop.rounds(max_iter):
+            # sym is symmetric, so out-degree on src IS the undirected degree
+            survivors = (
+                sym.groupBy("src").agg(F.count("*").alias("deg"))
+                .where(F.col("deg") >= k)
+                .select(F.col("src").alias("vid"))
             )
-            .observe(obs, F.count("*").alias("n"))
-            .repartition(n_part, "src")
-            .transform(flat_checkpoint)
-        )
-        new_edges = int(obs.get["n"] or 0)
-        dt = time.monotonic() - t0
-        converged = new_edges == n_edges
-        metrics.append(
-            {"iter": it, "edges": new_edges, "sec": dt, "converged": converged}
-        )
-        sym, n_edges = new_sym, new_edges
-        if converged:
-            break
-    if metrics and not metrics[-1]["converged"]:
-        warnings.warn(
-            f"k_core(k={k}) hit max_iter={max_iter} before the peel fixpoint: "
-            "the returned vertex set is a superset of the true k-core "
-            "(metrics[-1]['converged'] is False)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return sym.select("src").distinct().withColumnRenamed("src", "vid"), metrics
+            sym, row = loop.step(
+                sym.join(survivors.hint("shuffle_hash"), sym.src == survivors.vid, "left_semi")
+                .repartition(loop.n_part, "dst")
+                .join(
+                    survivors.hint("shuffle_hash"),
+                    F.col("dst") == survivors.vid,
+                    "left_semi",
+                ),
+                "src",
+                n=F.count("*"),
+            )
+            new_edges = int(row["n"] or 0)
+            converged = new_edges == n_edges
+            loop.emit(iter=it, edges=new_edges, converged=converged)
+            n_edges = new_edges
+            if converged:
+                break
+    return sym.select("src").distinct().withColumnRenamed("src", "vid"), loop.metrics
 
 
 def coreness(
@@ -144,6 +113,8 @@ def coreness(
     The victim count AND the next round's min/count scalars ride the degree
     materialization as observed metrics, so each round runs exactly ONE
     Spark action (the new-degree localCheckpoint; r7 — previously two).
+    Each metrics row has the round's threshold ``k``, ``victims`` and
+    ``alive``: the number of vertices alive BEFORE the round's peel.
 
     ``k_core(edges, k)``'s survivor set equals
     ``coreness(edges).where(coreness >= k)`` (tested in
@@ -160,127 +131,76 @@ def coreness(
     fold's rewrite cost is amortized O(victims) per fold (deep peels have
     small rounds by construction). Pinned by
     tests/test_linkstats.py::test_coreness_deep_peel_bounded_plan."""
-    spark = edges.sparkSession
-    # scale-adaptive layout width + aligned loop exchanges (plans/adaptive.py)
-    n_part = pick_n_part(spark, edges.count() * 2)
-    with shuffle_scope(spark, n_part):
-        return _coreness_impl(
-            spark, n_part, edges, vertices, max_iter, fold_every
+    with Loop(edges, 2, warn=(
+        f"coreness() hit max_iter={max_iter} before peeling completed: "
+        "vertices still alive are missing from the result"
+    )) as loop:
+        sym = loop.flat(symmetrize(edges.select("src", "dst")), "src")
+        # alive-degree table, hash(vid); its min/count scalars for round 0
+        # ride the same materialization
+        deg, row = loop.step(
+            sym.groupBy("src").agg(F.count("*").alias("deg"))
+            .select(F.col("src").alias("vid"), "deg"),
+            "vid",
+            mn=F.min("deg"),
+            alive=F.count("*"),
         )
-
-
-def _coreness_impl(
-    spark,
-    n_part: int,
-    edges: DataFrame,
-    vertices: Optional[DataFrame],
-    max_iter: int,
-    fold_every: int,
-) -> tuple[DataFrame, list[dict]]:
-    sym = (
-        symmetrize(edges.select("src", "dst"))
-        .repartition(n_part, "src")
-        .transform(flat_checkpoint)
-    )
-    # alive-degree table, explicitly re-laid hash(vid) so the stamped
-    # partitioning survives AQE (plans/flat.py); its min/count scalars for
-    # round 0 ride the same materialization as observed metrics.
-    deg_obs = Observation()
-    deg = (
-        sym.groupBy("src").agg(F.count("*").alias("deg"))
-        .select(F.col("src").alias("vid"), "deg")
-        .observe(deg_obs, F.min("deg").alias("mn"),
-                 F.count("*").alias("alive"))
-        .repartition(n_part, "vid")
-        .transform(flat_checkpoint)
-    )
-    row = deg_obs.get
-    mn, alive = row["mn"], int(row["alive"] or 0)
-    # (vid, coreness) victim batches, lazy over each round's checkpointed
-    # degree table; folded into peeled_acc every fold_every rounds so the
-    # final union plan and the pinned per-round checkpoints stay bounded.
-    peeled: list[DataFrame] = []
-    peeled_acc: Optional[DataFrame] = None
-
-    def _fold(batches: list[DataFrame], acc: Optional[DataFrame]) -> DataFrame:
-        out = acc
-        for p in batches:
-            out = p if out is None else out.unionByName(p)
-        return out.transform(flat_checkpoint)
-    metrics: list[dict] = []
-    k = 1
-    converged = False
-    for it in range(max_iter):
-        t0 = time.monotonic()
-        # mn/alive were observed on the materialization that produced the
-        # current deg table — each peel round runs exactly ONE action (the
-        # new-degree checkpoint), down from two (guide §1.5).
-        if alive == 0:
-            converged = True
-            metrics.append(
-                {"iter": it, "k": k, "alive": 0, "victims": 0,
-                 "sec": time.monotonic() - t0, "converged": True}
+        mn, alive = row["mn"], int(row["alive"] or 0)
+        # (vid, coreness) victim batches, lazy over each round's checkpointed
+        # degree table; folded into one flat checkpoint every fold_every
+        # rounds so the final union plan and the pinned per-round
+        # checkpoints stay bounded.
+        peeled: list[DataFrame] = []
+        folded: list[DataFrame] = []  # at most one flat checkpoint
+        k = 1
+        for it in loop.rounds(max_iter):
+            # mn/alive were observed on the materialization that produced
+            # the current deg table: each peel round runs exactly ONE action
+            if alive == 0:
+                loop.emit(iter=it, k=k, alive=0, victims=0, converged=True)
+                break
+            # fixpoint at the current threshold: jump straight to the smallest
+            # threshold that produces victims (min alive degree + 1). The alive
+            # graph is the t-core for every t <= mn, so victims removed at
+            # threshold k get core number k-1 = mn.
+            if mn >= k:
+                k = mn + 1
+            victims = deg.where(F.col("deg") < k)
+            peeled.append(victims.select("vid", F.lit(k - 1).alias("coreness")))
+            # losses: victims' incident edges aggregated to the surviving
+            # neighbor — THE one shuffle of the round, O(victim-incident edges).
+            # sym is hash(src)-partitioned and victims hash(vid): the semi join
+            # is exchange-free; the groupBy(dst) shuffles only victim edges.
+            losses = (
+                sym.join(victims.hint("shuffle_hash"), sym.src == victims.vid, "left_semi")
+                .groupBy("dst")
+                .agg(F.count("*").alias("loss"))
+                .select(F.col("dst").alias("vid"), "loss")
             )
-            break
-        # fixpoint at the current threshold: jump straight to the smallest
-        # threshold that produces victims (min alive degree + 1). The alive
-        # graph is the t-core for every t <= mn, so victims removed at
-        # threshold k get core number k-1 = mn.
-        if mn >= k:
-            k = mn + 1
-        victims = deg.where(F.col("deg") < k)
-        peeled.append(victims.select("vid", F.lit(k - 1).alias("coreness")))
-        # losses: victims' incident edges aggregated to the surviving
-        # neighbor — THE one shuffle of the round, O(victim-incident edges).
-        # sym is hash(src)-partitioned and victims hash(vid): the semi join
-        # is exchange-free; the groupBy(dst) shuffles only victim edges.
-        losses = (
-            sym.join(victims.hint("shuffle_hash"), sym.src == victims.vid, "left_semi")
-            .groupBy("dst")
-            .agg(F.count("*").alias("loss"))
-            .select(F.col("dst").alias("vid"), "loss")
-        )
-        # co-partitioned anti join (drop victims) + left join (apply losses);
-        # losses arrives hash(dst)==hash(vid) partitioned — no exchange.
-        # Losses into already-peeled vertices are dropped by the anti join
-        # on the victim side of earlier rounds (they are no longer in deg).
-        vc_obs = Observation()
-        deg = (
-            deg.join(victims.hint("shuffle_hash"), "vid", "left_anti")
-            .join(losses.hint("shuffle_hash"), "vid", "left")
-            .select(
-                "vid", (F.col("deg") - F.coalesce("loss", F.lit(0))).alias("deg")
+            # co-partitioned anti join (drop victims) + left join (apply losses);
+            # losses arrives hash(dst)==hash(vid) partitioned — no exchange.
+            # Losses into already-peeled vertices are dropped by the anti join
+            # on the victim side of earlier rounds (they are no longer in deg).
+            deg, row = loop.step(
+                deg.join(victims.hint("shuffle_hash"), "vid", "left_anti")
+                .join(losses.hint("shuffle_hash"), "vid", "left")
+                .select(
+                    "vid", (F.col("deg") - F.coalesce("loss", F.lit(0))).alias("deg")
+                ),
+                "vid",
+                mn=F.min("deg"),
+                alive=F.count("*"),
             )
-            .observe(vc_obs, F.min("deg").alias("mn"),
-                     F.count("*").alias("alive"))
-            .repartition(n_part, "vid")
-            .transform(flat_checkpoint)
-        )
-        m = vc_obs.get
-        pre_alive = alive
-        n_victims = alive - int(m["alive"] or 0)
-        mn, alive = m["mn"], int(m["alive"] or 0)
-        if len(peeled) >= fold_every:
-            peeled_acc = _fold(peeled, peeled_acc)
-            peeled = []
-        metrics.append(
-            {"iter": it, "k": k, "alive": pre_alive, "victims": n_victims,
-             "sec": time.monotonic() - t0, "converged": False}
-        )
-    if not converged:
-        warnings.warn(
-            f"coreness() hit max_iter={max_iter} before peeling completed: "
-            "vertices still alive are missing from the result "
-            "(metrics[-1]['converged'] is False)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    if peeled or peeled_acc is not None:
-        out = peeled_acc
-        for p in peeled:
-            out = p if out is None else out.unionByName(p)
+            pre_alive = alive
+            mn, alive = row["mn"], int(row["alive"] or 0)
+            if len(peeled) >= fold_every:
+                folded = [loop.flat(reduce(DataFrame.unionByName, folded + peeled))]
+                peeled = []
+            loop.emit(iter=it, k=k, alive=pre_alive, victims=pre_alive - alive)
+    if folded or peeled:
+        out = reduce(DataFrame.unionByName, folded + peeled)
     else:
-        out = sym.sparkSession.createDataFrame([], "vid long, coreness long")
+        out = edges.sparkSession.createDataFrame([], "vid long, coreness long")
     out = out.select("vid", F.col("coreness").cast("long").alias("coreness"))
     if vertices is not None:
         out = (
@@ -288,4 +208,4 @@ def _coreness_impl(
             .join(out, "vid", "left")
             .select("vid", F.coalesce("coreness", F.lit(0)).alias("coreness"))
         )
-    return out, metrics
+    return out, loop.metrics

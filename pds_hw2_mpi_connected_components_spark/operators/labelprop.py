@@ -35,15 +35,13 @@ an exact rewrite, not an approximation.
 
 from __future__ import annotations
 
-import time
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.adaptive import pick_n_part, shuffle_scope
 from ..plans.checkpoint import CheckpointStore
-from ..plans.flat import flat_checkpoint
+from ..plans.loop import Loop
 
 
 def lp_superstep(sym_edges: DataFrame, labels: DataFrame) -> DataFrame:
@@ -103,169 +101,118 @@ def label_propagation(
     ago, the deterministic update rule must repeat forever, so the loop
     stops early and the final metrics row carries ``converged="2-cycle"``.
     The returned labels equal what a full run holds at that iteration."""
-    spark = sym_edges.sparkSession
-    # scale-adaptive layout width + aligned loop exchanges (plans/adaptive.py)
-    n_part = pick_n_part(spark, sym_edges.count())
-    with shuffle_scope(spark, n_part):
-        return _label_propagation_impl(
-            n_part, sym_edges, vertices, max_iter, checkpoint,
-            frontier_threshold, dirty_broadcast_threshold, frontier_fraction,
-        )
-
-
-def _label_propagation_impl(
-    n_part: int,
-    sym_edges: DataFrame,
-    vertices: Optional[DataFrame],
-    max_iter: int,
-    checkpoint: Optional[CheckpointStore],
-    frontier_threshold: int,
-    dirty_broadcast_threshold: int,
-    frontier_fraction: float,
-) -> tuple[DataFrame, list[dict]]:
     if vertices is None:
         vertices = (
             sym_edges.select(F.col("src").alias("vid"))
             .union(sym_edges.select(F.col("dst").alias("vid")))
             .distinct()
         )
-    # flat + hash(src): the per-superstep gather join streams the edges with
-    # no exchange (labels side is hash(vid) = the join key's partitioning)
-    sym_edges = (
-        sym_edges.select("src", "dst").repartition(n_part, "src").transform(flat_checkpoint)
-    )
+    with Loop(sym_edges) as loop:
+        # flat + hash(src): the per-superstep gather join streams the edges
+        # with no exchange (labels side is hash(vid) = the join key's
+        # partitioning)
+        sym_edges = loop.flat(sym_edges.select("src", "dst"), "src")
 
-    start_iter, labels = 0, None
-    if checkpoint is not None:
-        resumed = checkpoint.latest("labelprop")
-        if resumed is not None:
-            start_iter, labels = resumed
-            labels = labels.repartition(n_part, "vid").transform(flat_checkpoint)
-            start_iter += 1
-    if labels is None:
-        labels = (
-            vertices.select("vid", F.col("vid").alias("label"))
-            .repartition(n_part, "vid")
-            .transform(flat_checkpoint)
-        )
-
-    metrics: list[dict] = []
-    n_vertices = labels.count()
-    changed_gate = min(frontier_threshold, max(1, int(n_vertices * frontier_fraction)))
-    changed_df: Optional[DataFrame] = None  # None => assume everything changed
-    changed = None
-    prev_state, prev2_state = None, None  # label-state fingerprints (t-1, t-2)
-    for it in range(start_iter, max_iter):
-        t0 = time.monotonic()
-        mode, dirty_rows, gather_edges = "full", None, sym_edges
-        if changed_df is not None and changed <= changed_gate:
-            # dirty dsts = vertices with at least one changed in-neighbor —
-            # the only vertices whose top-1 can differ this superstep.
-            dirty = (
-                sym_edges.join(
-                    F.broadcast(changed_df.select(F.col("vid").alias("src"))),
-                    "src",
-                    "left_semi",
-                )
-                .select(F.col("dst").alias("vid"))
-                .distinct()
-                .transform(flat_checkpoint)
-            )
-            dirty_rows = dirty.count()
-            if dirty_rows <= dirty_broadcast_threshold:
-                mode = "frontier"
-                gather_edges = sym_edges.join(
-                    F.broadcast(dirty.select(F.col("vid").alias("dst"))),
-                    "dst",
-                    "left_semi",
-                )
-        # non-dirty vertices keep their label via lp_superstep's left-join
-        # coalesce — exactly what a full recompute would assign them.
-        old_labels = labels
-        new_labels = lp_superstep(gather_edges, labels)
+        start_iter, labels = 0, None
         if checkpoint is not None:
-            # durable path: the parquet write cannot carry observations —
-            # keep the separate scalar actions.
-            new_labels = checkpoint.write("labelprop", it, new_labels)
-            new_labels = (
-                new_labels.repartition(n_part, "vid").transform(flat_checkpoint)
-            )
-            changed_df = (
-                new_labels.alias("a")
-                .join(labels.alias("b"), "vid")
-                .where(F.col("a.label") != F.col("b.label"))
-                .select("vid")
-                .transform(flat_checkpoint)
-            )
-            changed = changed_df.count()
-            srow = new_labels.agg(
-                F.count("*").alias("n"),
-                F.bit_xor(F.xxhash64("vid", "label")).alias("h"),
-            ).collect()[0]
-            state = (srow["n"], srow["h"])
-        else:
-            # ONE action per superstep: the changed count AND the
-            # period-2 fingerprint ride the label materialization as
-            # observed metrics (guide §1.5). The old-labels join is
-            # hash(vid)-co-partitioned (no exchange) and projected away,
-            # so the emitted (vid, label) rows are identical.
-            obs = Observation()
-            new_labels = (
-                new_labels
-                .join(
-                    old_labels.select(
-                        "vid", F.col("label").alias("_old")
-                    ).hint("shuffle_hash"),
-                    "vid",
+            resumed = checkpoint.latest("labelprop")
+            if resumed is not None:
+                start_iter, labels = resumed
+                labels = loop.flat(labels, "vid")
+                start_iter += 1
+        if labels is None:
+            labels = loop.flat(vertices.select("vid", F.col("vid").alias("label")), "vid")
+
+        n_vertices = labels.count()
+        changed_gate = min(frontier_threshold, max(1, int(n_vertices * frontier_fraction)))
+        changed_df: Optional[DataFrame] = None  # None => assume everything changed
+        changed = None
+        prev_state, prev2_state = None, None  # label-state fingerprints (t-1, t-2)
+        for it in loop.rounds(max_iter, start_iter):
+            mode, dirty_rows, gather_edges = "full", None, sym_edges
+            if changed_df is not None and changed <= changed_gate:
+                # dirty dsts = vertices with at least one changed in-neighbor —
+                # the only vertices whose top-1 can differ this superstep.
+                dirty = loop.flat(
+                    sym_edges.join(
+                        F.broadcast(changed_df.select(F.col("vid").alias("src"))),
+                        "src",
+                        "left_semi",
+                    )
+                    .select(F.col("dst").alias("vid"))
+                    .distinct()
                 )
-                .observe(
-                    obs,
-                    F.count("*").alias("n"),
-                    F.bit_xor(F.xxhash64("vid", "label")).alias("h"),
-                    F.coalesce(
-                        F.sum((F.col("label") != F.col("_old")).cast("long")),
-                        F.lit(0),
-                    ).alias("changed"),
-                )
-                .select("vid", "label")
-                .repartition(n_part, "vid")
-                .transform(flat_checkpoint)
-            )
-            srow = obs.get
-            changed = int(srow["changed"] or 0)
-            state = (srow["n"], srow["h"])
-            if 0 < changed <= changed_gate:
-                # the next superstep's frontier seed — materialized only
-                # when the frontier rewrite will actually consume it
-                changed_df = (
+                dirty_rows = dirty.count()
+                if dirty_rows <= dirty_broadcast_threshold:
+                    mode = "frontier"
+                    gather_edges = sym_edges.join(
+                        F.broadcast(dirty.select(F.col("vid").alias("dst"))),
+                        "dst",
+                        "left_semi",
+                    )
+            # non-dirty vertices keep their label via lp_superstep's left-join
+            # coalesce — exactly what a full recompute would assign them.
+            old_labels = labels
+            new_labels = lp_superstep(gather_edges, labels)
+            if checkpoint is not None:
+                # durable path: the parquet write cannot carry observations —
+                # keep the separate scalar actions.
+                new_labels = loop.flat(checkpoint.write("labelprop", it, new_labels), "vid")
+                changed_df = loop.flat(
                     new_labels.alias("a")
-                    .join(old_labels.alias("b").hint("shuffle_hash"), "vid")
+                    .join(labels.alias("b"), "vid")
                     .where(F.col("a.label") != F.col("b.label"))
                     .select("vid")
-                    .transform(flat_checkpoint)
                 )
+                changed = changed_df.count()
+                srow = new_labels.agg(
+                    F.count("*").alias("n"),
+                    F.bit_xor(F.xxhash64("vid", "label")).alias("h"),
+                ).collect()[0]
+                state = (srow["n"], srow["h"])
             else:
-                changed_df = None
-        m = {"iter": it, "changed": changed, "mode": mode, "sec": time.monotonic() - t0}
-        if dirty_rows is not None:
-            m["dirty"] = dirty_rows
-        labels = new_labels
-        if changed == 0:
-            m["converged"] = True
-            metrics.append(m)
-            if checkpoint is not None:
-                checkpoint.log_metrics("labelprop", m)
-            break
-        if state == prev2_state:
+                # the changed count AND the period-2 fingerprint are observed
+                # over a hash(vid)-co-partitioned join with the old labels (no
+                # exchange), projected away: the emitted rows are identical.
+                new_labels, srow = loop.step(
+                    new_labels
+                    .join(
+                        old_labels.select(
+                            "vid", F.col("label").alias("_old")
+                        ).hint("shuffle_hash"),
+                        "vid",
+                    ),
+                    "vid",
+                    keep=("vid", "label"),
+                    n=F.count("*"),
+                    h=F.bit_xor(F.xxhash64("vid", "label")),
+                    changed=F.coalesce(
+                        F.sum((F.col("label") != F.col("_old")).cast("long")),
+                        F.lit(0),
+                    ),
+                )
+                changed = int(srow["changed"] or 0)
+                state = (srow["n"], srow["h"])
+                if 0 < changed <= changed_gate:
+                    # the next superstep's frontier seed — materialized only
+                    # when the frontier rewrite will actually consume it
+                    changed_df = loop.flat(
+                        new_labels.alias("a")
+                        .join(old_labels.alias("b").hint("shuffle_hash"), "vid")
+                        .where(F.col("a.label") != F.col("b.label"))
+                        .select("vid")
+                    )
+                else:
+                    changed_df = None
+            labels = new_labels
             # labels(t) == labels(t-2) with changes still flowing: the
             # deterministic synchronous rule repeats forever from here.
-            m["converged"] = "2-cycle"
-            metrics.append(m)
+            converged = True if changed == 0 else "2-cycle" if state == prev2_state else False
+            extra = {} if dirty_rows is None else {"dirty": dirty_rows}
+            m = loop.emit(iter=it, changed=changed, mode=mode, converged=converged, **extra)
             if checkpoint is not None:
                 checkpoint.log_metrics("labelprop", m)
-            break
-        metrics.append(m)
-        if checkpoint is not None:
-            checkpoint.log_metrics("labelprop", m)
-        prev2_state, prev_state = prev_state, state
-    return labels, metrics
+            if converged:
+                break
+            prev2_state, prev_state = prev_state, state
+    return labels, loop.metrics

@@ -19,7 +19,7 @@ that are projected away, so no separate collect job exists).
 Enforced by tests/test_plan_audit.py. How:
 
 - every loop-static table is a FLAT, pre-partitioned LogicalRDD:
-  ``repartition(key).transform(flat_checkpoint)``. Two measured pyspark
+  ``loop.flat(df, key)`` (plans/loop.py). Two measured pyspark
   4.1.2 facts drive this (see tests/test_plan_audit.py):
   1. localCheckpoint PRESERVES the child's hash partitioning (the LogicalRDD
      captures outputPartitioning), so joins/aggs on the checkpointed table
@@ -31,15 +31,12 @@ Enforced by tests/test_plan_audit.py. How:
      (join + repartition) every single iteration because of this. Flat
      LogicalRDDs have no lineage to dedup and need no cache lookup.
 - per iteration, new_ranks is materialized with
-  ``repartition(n_part, "vid").transform(flat_checkpoint)``; the
-  repartition is ELIDED by the planner when the join output is already
+  ``loop.step(df, "vid", ...)``; the repartition is ELIDED by the planner when the join output is already
   hash(vid, n_part) (the normal case) and only actually shuffles when AQE
   re-planned the join output, so the steady-state budget is the groupBy
   alone. (The checkpointed-durability path re-reads parquet, which is
   genuinely unpartitioned — there the vertex-scale repartition is the
   price of resumability.)
-- localCheckpoint also cuts lineage every iteration (plan growth would
-  otherwise OOM analysis around iteration ~30, measured round 1).
 - materialized RDDs are freed by the driver GC + ContextCleaner once the
   loop drops its references — nothing stays pinned by CacheManager after
   the call returns (round 1 leaked the persisted statics).
@@ -49,15 +46,13 @@ Enforced by tests/test_plan_audit.py. How:
 
 from __future__ import annotations
 
-import time
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.adaptive import pick_n_part, shuffle_scope
 from ..plans.checkpoint import CheckpointStore
-from ..plans.flat import flat_checkpoint
+from ..plans.loop import Loop
 
 
 def pagerank(
@@ -81,226 +76,185 @@ def pagerank(
     pages, trusted domains); everything else — statics, per-iteration
     shuffle budget (ONE edge-scale groupBy(dst)), the single combined
     delta+dangling action — is shared with the uniform path unchanged."""
-    spark = edges.sparkSession
-    # scale-adaptive layout width: the loop's dominant table is the edge
-    # set; one cheap count (metadata-only for parquet sources, one narrow
-    # pass for checkpointed inputs) sizes every repartition in this call
-    # (plans/adaptive.py — guide §2.2: partitions from data, not a constant)
-    n_part = pick_n_part(spark, edges.count())
-    with shuffle_scope(spark, n_part):
-        return _pagerank_impl(
-            spark, n_part, edges, vertices, alpha, tol, max_iter,
-            checkpoint, salt_buckets, reset,
-        )
-
-
-def _pagerank_impl(
-    spark,
-    n_part: int,
-    edges: DataFrame,
-    vertices: Optional[DataFrame],
-    alpha: float,
-    tol: float,
-    max_iter: int,
-    checkpoint: Optional[CheckpointStore],
-    salt_buckets: int,
-    reset: Optional[DataFrame],
-) -> tuple[DataFrame, list[dict]]:
-    if vertices is None:
-        vertices = (
-            edges.select(F.col("src").alias("vid"))
-            .union(edges.select(F.col("dst").alias("vid")))
-            .distinct()
-        )
-    # flat + hash(vid): see module docstring for why localCheckpoint, not persist
-    vertices = (
-        vertices.select("vid").repartition(n_part, "vid").transform(flat_checkpoint)
-    )
-    n = vertices.count()
-    if n == 0:
-        return vertices.select("vid", F.lit(0.0).alias("rank")), []
-
-    out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
-    # static weighted edges: flat + hash(src), materialized once
-    w_edges = (
-        edges.join(out_deg, "src")
-        .select("src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("inv_deg"))
-        .repartition(n_part, "src")
-        .transform(flat_checkpoint)
-    )
-    # static dangling-vertex set (broadcast in the loop); flag column for the
-    # combined stats pass
-    dangling_v = (
-        vertices.join(out_deg, vertices.vid == out_deg.src, "left_anti")
-        .select("vid", F.lit(1).alias("is_dangling"))
-        .transform(flat_checkpoint)
-    )
-    n_dangling = dangling_v.count()
-
-    # personalized teleport vector: flat + hash(vid), same layout as the
-    # uniform-path vertices so every loop consumer stays co-partitioned
-    pvec = None
-    seed_fp = None
-    if reset is not None:
-        seeds = reset.select("vid").distinct()
-        # count + bit_xor of the effective seed set (seeds ∩ vertices) in the
-        # SAME action: the xor is a deterministic, order-free fingerprint that
-        # namespaces the checkpoint below — resuming with a different reset
-        # set must NOT silently restore ranks personalized for the old seeds
-        # (it would converge to a blend of the two personalizations).
-        srow = (
-            seeds.join(vertices, "vid", "left_semi")
-            .agg(F.count("*").alias("n"), F.expr("bit_xor(vid)").alias("x"))
-            .collect()[0]
-        )
-        n_seeds = srow["n"]
-        if n_seeds == 0:
-            raise ValueError(
-                "pagerank(reset=...): no seed vertex is present in the graph"
+    with Loop(edges) as loop:
+        if vertices is None:
+            vertices = (
+                edges.select(F.col("src").alias("vid"))
+                .union(edges.select(F.col("dst").alias("vid")))
+                .distinct()
             )
-        seed_fp = f"{n_seeds}x{(srow['x'] or 0) & 0xFFFFFFFFFFFFFFFF:016x}"
-        pvec = (
-            vertices.join(
-                F.broadcast(seeds.withColumn("is_seed", F.lit(1))), "vid", "left"
-            )
-            .select(
-                "vid",
-                F.when(F.col("is_seed") == 1, F.lit(1.0 / n_seeds))
-                .otherwise(F.lit(0.0))
-                .alias("p"),
-            )
-            .repartition(n_part, "vid")
-            .transform(flat_checkpoint)
-        )
+        # flat + hash(vid): see module docstring for why localCheckpoint, not persist
+        vertices = loop.flat(vertices.select("vid"), "vid")
+        n = vertices.count()
+        if n == 0:
+            return vertices.select("vid", F.lit(0.0).alias("rank")), []
 
-    ckpt_name = "pagerank" if reset is None else f"pagerank_ppr_{seed_fp}"
-    start_iter = 0
-    ranks = None
-    dangling = None
-    if checkpoint is not None:
-        resumed = checkpoint.latest(ckpt_name)
-        if resumed is not None:
-            start_iter, ranks = resumed
-            ranks = ranks.repartition(n_part, "vid").transform(flat_checkpoint)
-            start_iter += 1
-    if ranks is None:
-        if pvec is not None:
-            # seeded init: r0 = p (hash(vid) preserved by projection);
-            # initial dangling mass comes from the generic action below
-            ranks = pvec.select("vid", F.col("p").alias("rank"))
-        else:
-            # Project over the flat vertices: partitioning hash(vid) is preserved.
-            ranks = vertices.select("vid", F.lit(1.0 / n).alias("rank"))
-            dangling = n_dangling * (1.0 / n)  # uniform init: no action needed
-    if dangling is None:
-        dangling = (
-            ranks.join(dangling_v.select("vid").hint("shuffle_hash"), "vid", "left_semi")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-            .collect()[0][0]
+        out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
+        # static weighted edges: flat + hash(src), materialized once
+        w_edges = loop.flat(
+            edges.join(out_deg, "src")
+            .select("src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("inv_deg")),
+            "src",
         )
-
-    metrics: list[dict] = []
-    for it in range(start_iter, max_iter):
-        t0 = time.monotonic()
-        # shuffle-hash: build the hash table on the (small) ranks side; the
-        # pre-partitioned flat edges stream through with no sort and no
-        # exchange (A/B measured ~3x over the default sort-merge at 2M
-        # vertices)
-        joined = w_edges.join(ranks.hint("shuffle_hash"), w_edges.src == ranks.vid).select(
-            "src", "dst", (F.col("rank") * F.col("inv_deg")).alias("w")
+        # static dangling-vertex set (broadcast in the loop); flag column for the
+        # combined stats pass
+        dangling_v = loop.flat(
+            vertices.join(out_deg, vertices.vid == out_deg.src, "left_anti")
+            .select("vid", F.lit(1).alias("is_dangling"))
         )
-        if salt_buckets > 0:
-            # two-stage sum: (dst, salt) partials spread a hot dst key over
-            # salt_buckets reducers; salt is a deterministic function of src.
-            sums = (
-                joined.withColumn("salt", F.pmod(F.xxhash64("src"), F.lit(salt_buckets)))
-                .groupBy("dst", "salt").agg(F.sum("w").alias("pw"))
-                .groupBy("dst").agg(F.sum("pw").alias("in_w"))
-            )
-        else:
-            sums = joined.groupBy("dst").agg(F.sum("w").alias("in_w"))
+        n_dangling = dangling_v.count()
 
-        if pvec is not None:
-            # seeded: teleport + dangling mass land on the seeds via p(v)
-            seed_base = (1.0 - alpha) + alpha * dangling
-            new_ranks = (
-                pvec.join(sums.hint("shuffle_hash"), pvec.vid == sums.dst, "left")
-                .select(
-                    "vid",
-                    (
-                        F.lit(seed_base) * F.col("p")
-                        + F.lit(alpha) * F.coalesce("in_w", F.lit(0.0))
-                    ).alias("rank"),
-                )
-            )
-        else:
-            base = (1.0 - alpha) / n + alpha * dangling / n
-            new_ranks = (
-                vertices.join(sums.hint("shuffle_hash"), vertices.vid == sums.dst, "left")
-                .select(
-                    "vid",
-                    (F.lit(base) + F.lit(alpha) * F.coalesce("in_w", F.lit(0.0))).alias("rank"),
-                )
-            )
-        if checkpoint is not None:
-            # rows is n by construction (left join on the vertex table);
-            # passing it avoids an extra scan. The parquet re-read is
-            # unpartitioned: restore hash(vid) for the two consumers below.
-            # The delta+dangling scalars need their own action here (the
-            # parquet write cannot carry an observation).
-            new_ranks = checkpoint.write(ckpt_name, it, new_ranks, rows=n)
-            new_ranks = new_ranks.repartition(n_part, "vid").transform(flat_checkpoint)
-            row = (
-                new_ranks.alias("a")
-                .join(ranks.alias("b").select("vid", F.col("rank").alias("old_rank")), "vid")
-                .join(dangling_v.hint("shuffle_hash"), "vid", "left")
-                .agg(
-                    F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("delta"),
-                    F.coalesce(
-                        F.sum(F.when(F.col("is_dangling") == 1, F.col("rank"))), F.lit(0.0)
-                    ).alias("dangling"),
-                )
+        # personalized teleport vector: flat + hash(vid), same layout as the
+        # uniform-path vertices so every loop consumer stays co-partitioned
+        pvec = None
+        seed_fp = None
+        if reset is not None:
+            seeds = reset.select("vid").distinct()
+            # count + bit_xor of the effective seed set (seeds ∩ vertices) in the
+            # SAME action: the xor is a deterministic, order-free fingerprint that
+            # namespaces the checkpoint below — resuming with a different reset
+            # set must NOT silently restore ranks personalized for the old seeds
+            # (it would converge to a blend of the two personalizations).
+            srow = (
+                seeds.join(vertices, "vid", "left_semi")
+                .agg(F.count("*").alias("n"), F.expr("bit_xor(vid)").alias("x"))
                 .collect()[0]
             )
-            delta, dangling = row["delta"], row["dangling"]
-        else:
-            # ONE action per iteration: the L1 delta (convergence) and the
-            # dangling mass of new_ranks (needed next iteration) ride the
-            # checkpoint materialization as observed metrics — no separate
-            # collect() job (guide §1.5/§2.4; the scc/anf observe pattern).
-            # The old-ranks and dangling_v joins are hash(vid)-co-partitioned
-            # flat statics: they add NO exchange, and the inner join keeps
-            # all n vids (both sides cover the full vertex set), so the
-            # emitted (vid, rank) rows are bit-identical to the plain plan.
-            obs = Observation()
-            new_ranks = (
-                new_ranks
-                .join(
-                    ranks.select(
-                        "vid", F.col("rank").alias("old_rank")
-                    ).hint("shuffle_hash"),
-                    "vid",
+            n_seeds = srow["n"]
+            if n_seeds == 0:
+                raise ValueError(
+                    "pagerank(reset=...): no seed vertex is present in the graph"
                 )
-                .join(dangling_v.hint("shuffle_hash"), "vid", "left")
-                .observe(
-                    obs,
-                    F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("delta"),
-                    F.coalesce(
+            seed_fp = f"{n_seeds}x{(srow['x'] or 0) & 0xFFFFFFFFFFFFFFFF:016x}"
+            pvec = loop.flat(
+                vertices.join(
+                    F.broadcast(seeds.withColumn("is_seed", F.lit(1))), "vid", "left"
+                )
+                .select(
+                    "vid",
+                    F.when(F.col("is_seed") == 1, F.lit(1.0 / n_seeds))
+                    .otherwise(F.lit(0.0))
+                    .alias("p"),
+                ),
+                "vid",
+            )
+
+        ckpt_name = "pagerank" if reset is None else f"pagerank_ppr_{seed_fp}"
+        start_iter = 0
+        ranks = None
+        dangling = None
+        if checkpoint is not None:
+            resumed = checkpoint.latest(ckpt_name)
+            if resumed is not None:
+                start_iter, ranks = resumed
+                ranks = loop.flat(ranks, "vid")
+                start_iter += 1
+        if ranks is None:
+            if pvec is not None:
+                # seeded init: r0 = p (hash(vid) preserved by projection);
+                # initial dangling mass comes from the generic action below
+                ranks = pvec.select("vid", F.col("p").alias("rank"))
+            else:
+                # Project over the flat vertices: partitioning hash(vid) is preserved.
+                ranks = vertices.select("vid", F.lit(1.0 / n).alias("rank"))
+                dangling = n_dangling * (1.0 / n)  # uniform init: no action needed
+        if dangling is None:
+            dangling = (
+                ranks.join(dangling_v.select("vid").hint("shuffle_hash"), "vid", "left_semi")
+                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
+                .collect()[0][0]
+            )
+
+        for it in loop.rounds(max_iter, start_iter):
+            # shuffle-hash: build the hash table on the (small) ranks side; the
+            # pre-partitioned flat edges stream through with no sort and no
+            # exchange (A/B measured ~3x over the default sort-merge at 2M
+            # vertices)
+            joined = w_edges.join(ranks.hint("shuffle_hash"), w_edges.src == ranks.vid).select(
+                "src", "dst", (F.col("rank") * F.col("inv_deg")).alias("w")
+            )
+            if salt_buckets > 0:
+                # two-stage sum: (dst, salt) partials spread a hot dst key over
+                # salt_buckets reducers; salt is a deterministic function of src.
+                sums = (
+                    joined.withColumn("salt", F.pmod(F.xxhash64("src"), F.lit(salt_buckets)))
+                    .groupBy("dst", "salt").agg(F.sum("w").alias("pw"))
+                    .groupBy("dst").agg(F.sum("pw").alias("in_w"))
+                )
+            else:
+                sums = joined.groupBy("dst").agg(F.sum("w").alias("in_w"))
+
+            if pvec is not None:
+                # seeded: teleport + dangling mass land on the seeds via p(v)
+                seed_base = (1.0 - alpha) + alpha * dangling
+                new_ranks = (
+                    pvec.join(sums.hint("shuffle_hash"), pvec.vid == sums.dst, "left")
+                    .select(
+                        "vid",
+                        (
+                            F.lit(seed_base) * F.col("p")
+                            + F.lit(alpha) * F.coalesce("in_w", F.lit(0.0))
+                        ).alias("rank"),
+                    )
+                )
+            else:
+                base = (1.0 - alpha) / n + alpha * dangling / n
+                new_ranks = (
+                    vertices.join(sums.hint("shuffle_hash"), vertices.vid == sums.dst, "left")
+                    .select(
+                        "vid",
+                        (F.lit(base) + F.lit(alpha) * F.coalesce("in_w", F.lit(0.0))).alias("rank"),
+                    )
+                )
+            if checkpoint is not None:
+                # rows is n by construction (left join on the vertex table);
+                # passing it avoids an extra scan. The parquet re-read is
+                # unpartitioned: restore hash(vid) for the two consumers below.
+                # The delta+dangling scalars need their own action here (the
+                # parquet write cannot carry an observation).
+                new_ranks = checkpoint.write(ckpt_name, it, new_ranks, rows=n)
+                new_ranks = loop.flat(new_ranks, "vid")
+                row = (
+                    new_ranks.alias("a")
+                    .join(ranks.alias("b").select("vid", F.col("rank").alias("old_rank")), "vid")
+                    .join(dangling_v.hint("shuffle_hash"), "vid", "left")
+                    .agg(
+                        F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("delta"),
+                        F.coalesce(
+                            F.sum(F.when(F.col("is_dangling") == 1, F.col("rank"))), F.lit(0.0)
+                        ).alias("dangling"),
+                    )
+                    .collect()[0]
+                )
+                delta, dangling = row["delta"], row["dangling"]
+            else:
+                # the L1 delta and the next iteration's dangling mass are
+                # observed over hash(vid)-co-partitioned joins with the old
+                # ranks and dangling_v (NO exchange); the inner join keeps all
+                # n vids, so the emitted (vid, rank) rows are bit-identical.
+                new_ranks, row = loop.step(
+                    new_ranks
+                    .join(
+                        ranks.select(
+                            "vid", F.col("rank").alias("old_rank")
+                        ).hint("shuffle_hash"),
+                        "vid",
+                    )
+                    .join(dangling_v.hint("shuffle_hash"), "vid", "left"),
+                    "vid",
+                    keep=("vid", "rank"),
+                    delta=F.sum(F.abs(F.col("rank") - F.col("old_rank"))),
+                    dangling=F.coalesce(
                         F.sum(F.when(F.col("is_dangling") == 1, F.col("rank"))),
                         F.lit(0.0),
-                    ).alias("dangling"),
+                    ),
                 )
-                .select("vid", "rank")
-                .repartition(n_part, "vid")
-                .transform(flat_checkpoint)
-            )
-            m = obs.get
-            delta, dangling = m["delta"], m["dangling"]
-        dt = time.monotonic() - t0
-        metrics.append({"iter": it, "l1_delta": delta, "dangling": dangling, "sec": dt})
-        if checkpoint is not None:
-            checkpoint.log_metrics(ckpt_name, metrics[-1])
-        ranks = new_ranks
-        if delta < tol:
-            break
-    return ranks, metrics
+                delta, dangling = row["delta"], row["dangling"]
+            m = loop.emit(iter=it, l1_delta=delta, dangling=dangling,
+                          converged=delta < tol)
+            if checkpoint is not None:
+                checkpoint.log_metrics(ckpt_name, m)
+            ranks = new_ranks
+            if delta < tol:
+                break
+        return ranks, loop.metrics

@@ -39,16 +39,11 @@ argument as the star-contraction CC loop, operators/cc.py).
 
 from __future__ import annotations
 
-import time
-import warnings
-from typing import Optional
-
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.adaptive import pick_n_part, shuffle_scope
+from ..plans.loop import Loop
 from ..sources.graph_build import symmetrize
-from ..plans.flat import flat_checkpoint
 
 
 def bfs_hops(
@@ -71,87 +66,48 @@ def bfs_hops(
     hops for every emitted vertex, missing vertices farther away) — the
     final entry then has ``converged: False`` and a RuntimeWarning is
     emitted."""
-    spark = edges.sparkSession
-    # scale-adaptive layout width + aligned loop exchanges (plans/adaptive.py)
-    n_part = pick_n_part(spark, edges.count() * (1 if directed else 2))
-    with shuffle_scope(spark, n_part):
-        return _bfs_hops_impl(spark, n_part, edges, sources, max_iter,
-                              directed)
-
-
-def _bfs_hops_impl(
-    spark,
-    n_part: int,
-    edges: DataFrame,
-    sources: DataFrame,
-    max_iter: int,
-    directed: bool,
-) -> tuple[DataFrame, list[dict]]:
     arcs = edges.select("src", "dst")
     if not directed:
         arcs = symmetrize(arcs)
     else:
         arcs = arcs.where(F.col("src") != F.col("dst")).distinct()
-    sym = arcs.repartition(n_part, "src").transform(flat_checkpoint)
-
-    dist = (
-        sources.select(F.col("vid").cast("long").alias("vid"))
-        .distinct()
-        .select("vid", F.lit(0).cast("long").alias("hops"))
-        .repartition(n_part, "vid")
-        .transform(flat_checkpoint)
-    )
-    frontier = dist
-    metrics: list[dict] = []
-    converged = False
-    for it in range(1, max_iter + 1):
-        t0 = time.monotonic()
-        # frontier-incident edges -> dedup'd neighbor set: the round's ONE
-        # shuffle (groupBy(dst)); the semi join is co-partitioned.
-        nbrs = (
-            sym.join(
-                frontier.hint("shuffle_hash"), sym.src == frontier.vid, "left_semi"
-            )
-            .select("dst")
+    with Loop(edges, 1 if directed else 2, warn=(
+        f"bfs_hops() hit max_iter={max_iter} with a non-empty frontier: "
+        "the result covers only vertices within that many hops"
+    )) as loop:
+        sym = loop.flat(arcs, "src")
+        dist = loop.flat(
+            sources.select(F.col("vid").cast("long").alias("vid"))
             .distinct()
-            .select(F.col("dst").alias("vid"))
+            .select("vid", F.lit(0).cast("long").alias("hops")),
+            "vid",
         )
-        # co-partitioned full-outer merge: visited keep their hops, unseen
-        # neighbors get this round's number; newly-reached count observed
-        # on the same materializing job.
-        obs = Observation()
-        dist = (
-            dist.join(nbrs.hint("shuffle_hash"), "vid", "full")
-            .select(
+        frontier = dist
+        for it in loop.rounds(max_iter + 1, 1):
+            # frontier-incident edges -> dedup'd neighbor set: the round's ONE
+            # shuffle (groupBy(dst)); the semi join is co-partitioned.
+            nbrs = (
+                sym.join(
+                    frontier.hint("shuffle_hash"), sym.src == frontier.vid, "left_semi"
+                )
+                .select("dst")
+                .distinct()
+                .select(F.col("dst").alias("vid"))
+            )
+            # co-partitioned full-outer merge: visited keep their hops, unseen
+            # neighbors get this round's number.
+            dist, row = loop.step(
+                dist.join(nbrs.hint("shuffle_hash"), "vid", "full")
+                .select(
+                    "vid",
+                    F.coalesce("hops", F.lit(it).cast("long")).alias("hops"),
+                ),
                 "vid",
-                F.coalesce("hops", F.lit(it).cast("long")).alias("hops"),
+                new=F.sum((F.col("hops") == it).cast("long")),
             )
-            .observe(
-                obs,
-                F.sum((F.col("hops") == it).cast("long")).alias("new"),
-            )
-            .repartition(n_part, "vid")
-            .transform(flat_checkpoint)
-        )
-        n_new = int(obs.get["new"] or 0)
-        metrics.append(
-            {
-                "iter": it,
-                "reached": n_new,
-                "sec": time.monotonic() - t0,
-                "converged": n_new == 0,
-            }
-        )
-        if n_new == 0:
-            converged = True
-            break
-        frontier = dist.where(F.col("hops") == it)
-    if not converged:
-        warnings.warn(
-            f"bfs_hops() hit max_iter={max_iter} with a non-empty frontier: "
-            "the result covers only vertices within that many hops "
-            "(metrics[-1]['converged'] is False)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return dist, metrics
+            n_new = int(row["new"] or 0)
+            loop.emit(iter=it, reached=n_new, converged=n_new == 0)
+            if n_new == 0:
+                break
+            frontier = dist.where(F.col("hops") == it)
+    return dist, loop.metrics

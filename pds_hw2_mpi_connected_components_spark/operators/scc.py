@@ -74,15 +74,13 @@ entry), the k_core/bfs_hops contract.
 from __future__ import annotations
 
 import os
-import time
-import warnings
+from functools import reduce
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.adaptive import pick_n_part, shuffle_scope
-from ..plans.flat import flat_checkpoint
+from ..plans.loop import Loop
 
 #: Default bound (rows: max(alive vertices, alive arcs)) under which the
 #: remaining subgraph is collected and finished with a driver-local Tarjan
@@ -180,9 +178,6 @@ def strongly_connected_components(
     If ``max_iter`` total inner rounds run out, vertices still alive are
     MISSING from the result, the final metrics entry has
     ``converged: False``, and a RuntimeWarning is emitted."""
-    spark = edges.sparkSession
-    # scale-adaptive layout width + aligned loop exchanges (plans/adaptive.py)
-    n_part = pick_n_part(spark, edges.count())
     if local_threshold is None:
         try:
             local_threshold = int(
@@ -190,292 +185,244 @@ def strongly_connected_components(
             )
         except ValueError:
             local_threshold = LOCAL_LIMIT_DEFAULT
-    with shuffle_scope(spark, n_part):
-        return _scc_impl(
-            spark, n_part, edges, vertices, max_iter, fold_every,
-            local_threshold,
+    spark = edges.sparkSession
+    with Loop(edges, warn=(
+        f"strongly_connected_components() hit max_iter={max_iter} before "
+        "decomposition completed: vertices still alive are missing from the result"
+    )) as loop:
+        arcs, row = loop.step(
+            edges.select(F.col("src").cast("long").alias("src"),
+                         F.col("dst").cast("long").alias("dst"))
+            .where(F.col("src") != F.col("dst"))
+            .distinct(),
+            "src",
+            n=F.count("*"),
         )
-
-
-def _scc_impl(
-    spark,
-    n_part: int,
-    edges: DataFrame,
-    vertices: Optional[DataFrame],
-    max_iter: int,
-    fold_every: int,
-    local_threshold: int,
-) -> tuple[DataFrame, list[dict]]:
-    arcs_obs = Observation()
-    arcs = (
-        edges.select(F.col("src").cast("long").alias("src"),
-                     F.col("dst").cast("long").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .observe(arcs_obs, F.count("*").alias("n"))
-        .repartition(n_part, "src")
-        .transform(flat_checkpoint)
-    )
-    alive = (
-        arcs.select(F.col("src").alias("vid"))
-        .union(arcs.select(F.col("dst").alias("vid")))
-        .distinct()
-        .repartition(n_part, "vid")
-        .transform(flat_checkpoint)
-    )
-    n_alive = alive.count()
-    n_arcs = int(arcs_obs.get["n"] or 0)
-
-    assigned: list[DataFrame] = []  # (vid, scc) batches over flat state
-    assigned_acc: Optional[DataFrame] = None
-
-    def _fold(force: bool = False) -> None:
-        nonlocal assigned, assigned_acc
-        if not assigned or (not force and len(assigned) < fold_every):
-            return
-        out = assigned_acc
-        for b in assigned:
-            out = b if out is None else out.unionByName(b)
-        assigned_acc = out.transform(flat_checkpoint)
-        assigned = []
-
-    def _shrink_arcs(a: DataFrame, keep: DataFrame) -> tuple[DataFrame, int]:
-        """Arcs with BOTH endpoints in ``keep`` — two semi joins
-        (k_core's shape), returned flat hash(src) with the surviving arc
-        count observed on the same materializing job (feeds the
-        local-finish gate at zero extra actions)."""
-        obs = Observation()
-        df = (
-            a.join(keep.hint("shuffle_hash"), a.src == keep.vid, "left_semi")
-            .repartition(n_part, "dst")
-            .join(keep.hint("shuffle_hash"), F.col("dst") == keep.vid, "left_semi")
-            .observe(obs, F.count("*").alias("n"))
-            .repartition(n_part, "src")
-            .transform(flat_checkpoint)
+        alive = loop.flat(
+            arcs.select(F.col("src").alias("vid"))
+            .union(arcs.select(F.col("dst").alias("vid")))
+            .distinct(),
+            "vid",
         )
-        return df, int(obs.get["n"] or 0)
+        n_alive = alive.count()
+        n_arcs = int(row["n"] or 0)
 
-    metrics: list[dict] = []
-    rounds_left = max_iter
+        assigned: list[DataFrame] = []  # (vid, scc) batches over flat state
+        folded: list[DataFrame] = []  # at most one flat checkpoint
 
-    def _tick(phase: str, outer: int, n: int, t0: float) -> None:
-        metrics.append({
-            "phase": phase, "outer": outer, "iter": len(metrics), "n": n,
-            "sec": round(time.monotonic() - t0, 4), "converged": False,
-        })
+        def _fold(force: bool = False) -> None:
+            nonlocal assigned, folded
+            if not assigned or (not force and len(assigned) < fold_every):
+                return
+            folded = [loop.flat(reduce(DataFrame.unionByName, folded + assigned))]
+            assigned = []
 
-    def _local_gate() -> bool:
-        return bool(local_threshold) and max(n_alive, n_arcs) <= local_threshold
-
-    def _local_finish() -> None:
-        """Driver-local Tarjan over the (bounded, gate-checked) remnant:
-        one collect of alive vids + arcs, one pass, one createDataFrame —
-        replaces O(condensation-tail) further barrier rounds with O(1)
-        actions. Labels identical by construction (min vid per SCC)."""
-        nonlocal converged, n_alive
-        t0 = time.monotonic()
-        vids = [r[0] for r in alive.select("vid").collect()]
-        pairs = [(r[0], r[1]) for r in arcs.select("src", "dst").collect()]
-        labeled = _tarjan_min_labels(vids, pairs)
-        if labeled:
-            assigned.append(
-                spark.createDataFrame(labeled, "vid long, scc long")
-                .repartition(n_part, "vid")
+        def _shrink_arcs(a: DataFrame, keep: DataFrame) -> tuple[DataFrame, int]:
+            """Arcs with BOTH endpoints in ``keep`` — two semi joins
+            (k_core's shape), returned flat hash(src) with the surviving arc
+            count observed on the same materializing job (feeds the
+            local-finish gate at zero extra actions)."""
+            df, row = loop.step(
+                a.join(keep.hint("shuffle_hash"), a.src == keep.vid, "left_semi")
+                .repartition(loop.n_part, "dst")
+                .join(keep.hint("shuffle_hash"), F.col("dst") == keep.vid, "left_semi"),
+                "src",
+                n=F.count("*"),
             )
-        _tick("local", outer, len(vids), t0)
-        n_alive = 0
-        converged = True
+            return df, int(row["n"] or 0)
 
-    outer = 0
-    converged = n_alive == 0
-    while not converged and rounds_left > 0:
-        if _local_gate():
-            _local_finish()
-            break
-        # ------------------------------------------------------ 1. trim --
-        while rounds_left > 0:
-            rounds_left -= 1
-            t0 = time.monotonic()
-            has_out = arcs.select(F.col("src").alias("vid")).distinct()
-            has_in = arcs.select(F.col("dst").alias("vid")).distinct()
-            keep = has_out.join(has_in.hint("shuffle_hash"), "vid", "left_semi")
-            obs = Observation()
-            new_alive = (
-                alive.join(keep.hint("shuffle_hash"), "vid", "left_semi")
-                .observe(obs, F.count("*").alias("kept"))
-                .repartition(n_part, "vid")
-                .transform(flat_checkpoint)
-            )
-            n_kept = int(obs.get["kept"] or 0)
-            n_trimmed = n_alive - n_kept
-            _tick("trim", outer, n_trimmed, t0)
-            if n_trimmed == 0:
+        def _tick(phase: str, n: int) -> None:
+            loop.emit(phase=phase, outer=outer, iter=len(loop.metrics), n=n)
+
+        def _local_gate() -> bool:
+            return bool(local_threshold) and max(n_alive, n_arcs) <= local_threshold
+
+        def _local_finish() -> None:
+            """Driver-local Tarjan over the (bounded, gate-checked) remnant:
+            one collect of alive vids + arcs, one pass, one createDataFrame —
+            replaces O(condensation-tail) further barrier rounds with O(1)
+            actions. Labels identical by construction (min vid per SCC)."""
+            nonlocal converged, n_alive
+            vids = [r[0] for r in alive.select("vid").collect()]
+            pairs = [(r[0], r[1]) for r in arcs.select("src", "dst").collect()]
+            labeled = _tarjan_min_labels(vids, pairs)
+            if labeled:
+                assigned.append(
+                    spark.createDataFrame(labeled, "vid long, scc long")
+                    .repartition(loop.n_part, "vid")
+                )
+            _tick("local", len(vids))
+            n_alive = 0
+            converged = True
+
+        # one round budget shared by every phase: max_iter caps TOTAL rounds
+        budget = loop.rounds(max_iter)
+        outer = 0
+        converged = n_alive == 0
+        while not converged and not loop.exhausted:
+            if _local_gate():
+                _local_finish()
                 break
-            # trimmed vertices are singleton SCCs (scc = own vid)
-            assigned.append(
-                alive.join(new_alive, "vid", "left_anti")
-                .select("vid", F.col("vid").alias("scc"))
-            )
-            _fold()
-            alive, n_alive = new_alive, n_kept
+            # ---------------------------------------------------- 1. trim --
+            for _ in budget:
+                has_out = arcs.select(F.col("src").alias("vid")).distinct()
+                has_in = arcs.select(F.col("dst").alias("vid")).distinct()
+                keep = has_out.join(has_in.hint("shuffle_hash"), "vid", "left_semi")
+                new_alive, row = loop.step(
+                    alive.join(keep.hint("shuffle_hash"), "vid", "left_semi"),
+                    "vid",
+                    kept=F.count("*"),
+                )
+                n_kept = int(row["kept"] or 0)
+                n_trimmed = n_alive - n_kept
+                _tick("trim", n_trimmed)
+                if n_trimmed == 0:
+                    break
+                # trimmed vertices are singleton SCCs (scc = own vid)
+                assigned.append(
+                    alive.join(new_alive, "vid", "left_anti")
+                    .select("vid", F.col("vid").alias("scc"))
+                )
+                _fold()
+                alive, n_alive = new_alive, n_kept
+                if n_alive == 0:
+                    break
+                arcs, n_arcs = _shrink_arcs(arcs, alive)
+                if _local_gate():
+                    break
             if n_alive == 0:
+                converged = True
+                break
+            if _local_gate():
+                _local_finish()
+                break
+            if loop.exhausted:
+                break
+
+            # --------------------------------------------------- 2. color --
+            # colors inherits alive's flat hash(vid) partitioning via projection
+            colors = alive.select("vid", F.col("vid").alias("color"))
+            colored = False
+            for _ in budget:
+                in_min = (
+                    arcs.join(colors.hint("shuffle_hash"), arcs.src == colors.vid)
+                    .groupBy("dst")
+                    .agg(F.min("color").alias("in_min"))
+                    .select(F.col("dst").alias("vid"), "in_min")
+                )
+                stepped = (
+                    colors.join(in_min.hint("shuffle_hash"), "vid", "left")
+                    .select(
+                        "vid",
+                        F.least("color", F.coalesce("in_min", "color")).alias("color"),
+                        (F.coalesce("in_min", "color") < F.col("color"))
+                        .cast("long").alias("chg"),
+                    )
+                )
+                # pointer jumping: color(v) <- min(color(v),
+                # prev_color(color(v))). prev_color(c) is the color of an
+                # ancestor of v (c reaches v), so the invariant "color(v) is
+                # the vid of an ancestor or v itself" is preserved, the update
+                # is monotone, and the fixpoint (min over ancestors) is
+                # unchanged — but a chain-shaped condensation converges in
+                # O(log chain) rounds instead of O(chain)
+                # (tests/test_scc.py::test_scc_color_pointer_jumping_rounds).
+                # Cost: one vertex-scale join keyed on the candidate color.
+                jump = colors.select(
+                    F.col("vid").alias("jvid"), F.col("color").alias("jcolor")
+                )
+                nxt, row = loop.step(
+                    stepped.join(
+                        jump.hint("shuffle_hash"),
+                        stepped.color == jump.jvid,
+                        "left",
+                    )
+                    .select(
+                        "vid",
+                        F.least(
+                            "color", F.coalesce("jcolor", "color")
+                        ).alias("color"),
+                        (
+                            (F.col("chg") == 1)
+                            | (F.coalesce("jcolor", "color") < F.col("color"))
+                        ).cast("long").alias("chg"),
+                    ),
+                    "vid",
+                    changed=F.coalesce(F.sum("chg"), F.lit(0)),
+                )
+                colors = nxt.drop("chg")
+                n_changed = int(row["changed"] or 0)
+                _tick("color", n_changed)
+                if n_changed == 0:
+                    colored = True
+                    break
+            if not colored:
+                break  # the round budget ran out mid-coloring
+
+            # -------------------------------------------------- 3. gather --
+            arcs_by_dst = loop.flat(arcs, "dst")
+            reached, row = loop.step(
+                colors.where(F.col("vid") == F.col("color"))
+                .select("vid", F.col("color").alias("scc")),
+                "vid",
+                pivots=F.count("*"),
+            )
+            n_reached = int(row["pivots"] or 0)
+            frontier = reached
+            for _ in budget:
+                # predecessors of the frontier, carrying the frontier's scc;
+                # the repartition is the round's one exchange
+                # (O(frontier-incident arcs)); the colors join is then
+                # co-partitioned and the color match keeps only same-class
+                # predecessors; min-dedup per vid needs no further exchange.
+                cand = (
+                    arcs_by_dst.join(frontier.hint("shuffle_hash"),
+                                     arcs_by_dst.dst == frontier.vid)
+                    .select(F.col("src").alias("vid"), "scc")
+                    .repartition(loop.n_part, "vid")
+                    .join(colors.hint("shuffle_hash"), "vid")
+                    .where(F.col("scc") == F.col("color"))
+                    .groupBy("vid")
+                    .agg(F.min("scc").alias("scc"))
+                )
+                merged, row = loop.step(
+                    reached.alias("r")
+                    .join(cand.alias("c"), "vid", "full")
+                    .select(
+                        "vid",
+                        F.coalesce(F.col("r.scc"), F.col("c.scc")).alias("scc"),
+                        F.col("r.scc").isNull().cast("long").alias("new"),
+                    ),
+                    "vid",
+                    new=F.coalesce(F.sum("new"), F.lit(0)),
+                )
+                n_new = int(row["new"] or 0)
+                n_reached += n_new
+                reached = merged.drop("new")
+                _tick("gather", n_new)
+                if n_new == 0:
+                    break
+                frontier = merged.where(F.col("new") == 1).select("vid", "scc")
+            assigned.append(reached)
+            _fold()
+            alive = loop.flat(
+                alive.join(reached.hint("shuffle_hash"), "vid", "left_anti"), "vid"
+            )
+            n_alive -= n_reached
+            if n_alive == 0:
+                converged = True
                 break
             arcs, n_arcs = _shrink_arcs(arcs, alive)
-            if _local_gate():
-                break
-        if n_alive == 0:
-            converged = True
-            break
-        if _local_gate():
-            _local_finish()
-            break
-        if rounds_left <= 0:
-            break
+            outer += 1
 
-        # ----------------------------------------------------- 2. color --
-        # colors inherits alive's flat hash(vid) partitioning via projection
-        colors = alive.select("vid", F.col("vid").alias("color"))
-        colored = False
-        while rounds_left > 0:
-            rounds_left -= 1
-            t0 = time.monotonic()
-            in_min = (
-                arcs.join(colors.hint("shuffle_hash"), arcs.src == colors.vid)
-                .groupBy("dst")
-                .agg(F.min("color").alias("in_min"))
-                .select(F.col("dst").alias("vid"), "in_min")
-            )
-            stepped = (
-                colors.join(in_min.hint("shuffle_hash"), "vid", "left")
-                .select(
-                    "vid",
-                    F.least("color", F.coalesce("in_min", "color")).alias("color"),
-                    (F.coalesce("in_min", "color") < F.col("color"))
-                    .cast("long").alias("chg"),
-                )
-            )
-            # pointer jumping (VERDICT r6 #6): color(v) <- min(color(v),
-            # prev_color(color(v))). prev_color(c) is the color of an
-            # ancestor of v (c reaches v), so the invariant "color(v) is
-            # the vid of an ancestor or v itself" is preserved, the update
-            # is monotone, and the fixpoint (min over ancestors) is
-            # unchanged — but a chain-shaped condensation converges in
-            # O(log chain) rounds instead of O(chain)
-            # (tests/test_scc.py::test_scc_color_pointer_jumping_rounds).
-            # Cost: one vertex-scale join keyed on the candidate color.
-            jump = colors.select(
-                F.col("vid").alias("jvid"), F.col("color").alias("jcolor")
-            )
-            obs = Observation()
-            nxt = (
-                stepped.join(
-                    jump.hint("shuffle_hash"),
-                    stepped.color == jump.jvid,
-                    "left",
-                )
-                .select(
-                    "vid",
-                    F.least(
-                        "color", F.coalesce("jcolor", "color")
-                    ).alias("color"),
-                    (
-                        (F.col("chg") == 1)
-                        | (F.coalesce("jcolor", "color") < F.col("color"))
-                    ).cast("long").alias("chg"),
-                )
-                .observe(obs, F.coalesce(F.sum("chg"), F.lit(0)).alias("changed"))
-                .repartition(n_part, "vid")
-                .transform(flat_checkpoint)
-            )
-            colors = nxt.drop("chg")
-            n_changed = int(obs.get["changed"] or 0)
-            _tick("color", outer, n_changed, t0)
-            if n_changed == 0:
-                colored = True
-                break
-        if not colored:
-            break  # rounds_left exhausted mid-coloring
+        loop.metrics.append({
+            "phase": "done", "outer": outer, "iter": len(loop.metrics),
+            "n": n_alive, "sec": 0.0, "converged": converged,
+        })
+        _fold(force=True)
 
-        # ---------------------------------------------------- 3. gather --
-        arcs_by_dst = arcs.repartition(n_part, "dst").transform(flat_checkpoint)
-        obs0 = Observation()
-        reached = (
-            colors.where(F.col("vid") == F.col("color"))
-            .select("vid", F.col("color").alias("scc"))
-            .observe(obs0, F.count("*").alias("pivots"))
-            .repartition(n_part, "vid")
-            .transform(flat_checkpoint)
-        )
-        n_reached = int(obs0.get["pivots"] or 0)
-        frontier = reached
-        while rounds_left > 0:
-            rounds_left -= 1
-            t0 = time.monotonic()
-            # predecessors of the frontier, carrying the frontier's scc;
-            # the repartition is the round's one exchange
-            # (O(frontier-incident arcs)); the colors join is then
-            # co-partitioned and the color match keeps only same-class
-            # predecessors; min-dedup per vid needs no further exchange.
-            cand = (
-                arcs_by_dst.join(frontier.hint("shuffle_hash"),
-                                 arcs_by_dst.dst == frontier.vid)
-                .select(F.col("src").alias("vid"), "scc")
-                .repartition(n_part, "vid")
-                .join(colors.hint("shuffle_hash"), "vid")
-                .where(F.col("scc") == F.col("color"))
-                .groupBy("vid")
-                .agg(F.min("scc").alias("scc"))
-            )
-            obs = Observation()
-            merged = (
-                reached.alias("r")
-                .join(cand.alias("c"), "vid", "full")
-                .select(
-                    "vid",
-                    F.coalesce(F.col("r.scc"), F.col("c.scc")).alias("scc"),
-                    F.col("r.scc").isNull().cast("long").alias("new"),
-                )
-                .observe(obs, F.coalesce(F.sum("new"), F.lit(0)).alias("new"))
-                .repartition(n_part, "vid")
-                .transform(flat_checkpoint)
-            )
-            n_new = int(obs.get["new"] or 0)
-            n_reached += n_new
-            reached = merged.drop("new")
-            _tick("gather", outer, n_new, t0)
-            if n_new == 0:
-                break
-            frontier = merged.where(F.col("new") == 1).select("vid", "scc")
-        assigned.append(reached)
-        _fold()
-        alive = (
-            alive.join(reached.hint("shuffle_hash"), "vid", "left_anti")
-            .repartition(n_part, "vid")
-            .transform(flat_checkpoint)
-        )
-        n_alive -= n_reached
-        if n_alive == 0:
-            converged = True
-            break
-        arcs, n_arcs = _shrink_arcs(arcs, alive)
-        outer += 1
-
-    if not converged:
-        warnings.warn(
-            f"strongly_connected_components() hit max_iter={max_iter} before "
-            "decomposition completed: vertices still alive are missing from "
-            "the result (metrics[-1]['converged'] is False)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    metrics.append({
-        "phase": "done", "outer": outer, "iter": len(metrics),
-        "n": n_alive, "sec": 0.0, "converged": converged,
-    })
-
-    _fold(force=True)
-    if assigned_acc is not None:
-        out = assigned_acc
+    if folded:
+        out = folded[0]
     else:
         out = spark.createDataFrame([], "vid long, scc long")
     out = out.select("vid", F.col("scc").cast("long").alias("scc"))
@@ -493,4 +440,4 @@ def _scc_impl(
             .join(out, "vid", "left")
             .select("vid", F.coalesce("scc", "vid").alias("scc"))
         )
-    return out, metrics
+    return out, loop.metrics

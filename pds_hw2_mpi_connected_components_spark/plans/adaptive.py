@@ -2,31 +2,29 @@
 
 The fixpoint operators lay out their loop state and statics with explicit
 ``repartition(n_part, key)`` calls so that every loop join is
-co-partitioned and exchange-free (plans/flat.py).  An explicit partition
+co-partitioned and exchange-free (plans/loop.py).  An explicit partition
 count, however, disables AQE coalescing for those exchanges: with the
 session default (``spark.sql.shuffle.partitions``, sized for the cluster),
 a megabyte-scale graph still pays the full task fan-out on every one of
 hundreds of fixpoint rounds — measured on the bench graph (15k edges,
 local[32]): SCC 33 s at n_part=32 vs 11 s at n_part=1, PageRank 11 s vs
-5.5 s.  The guide's rule (spark_optimization_guide.md §2.2/§2.5) is to
-size partitions from the data, not from a constant tuned for either local
-mode or the cluster.
+5.5 s.  Partitions are sized from the data, not from a constant tuned for
+either local mode or the cluster.
 
 :func:`pick_n_part` derives the partition count from the operator's input
 row count:
 
-    n_part = clamp(ceil(n_rows / rows_per_part), 1, shuffle.partitions)
+    n_part = clamp(ceil(n_rows / DEFAULT_ROWS_PER_PART), 2, shuffle.partitions)
 
 ``spark.sql.shuffle.partitions`` stays the *ceiling* — on a production
 cluster (where the operator's input has billions of rows) the formula
 saturates at the configured value and behavior is unchanged; the formula
-only removes task fan-out that the data cannot use.  ``rows_per_part``
-(conf ``spark.graft.rowsPerPartition`` or $SPARK_GRAFT_ROWS_PER_PART,
-default 65536) is the minimum work that justifies one more task: 64k
-edge rows ≈ 1-2 MB ≈ ~50 ms of per-task compute, an order of magnitude
-above the per-task scheduling overhead it costs (A/B at bench scale:
-64k rows/part beat 256k on the 112k-edge pipeline graph, 3.4 s vs 3.9 s
-CC, while leaving the 15k-edge doc-graph legs at the floor).
+only removes task fan-out that the data cannot use.
+``DEFAULT_ROWS_PER_PART`` (65536) is the minimum work that justifies one
+more task: 64k edge rows ≈ 1-2 MB ≈ ~50 ms of per-task compute, an order
+of magnitude above the per-task scheduling overhead it costs (A/B at bench
+scale: 64k rows/part beat 256k on the 112k-edge pipeline graph, 3.4 s vs
+3.9 s CC, while leaving the 15k-edge doc-graph legs at the floor).
 
 Every table inside one operator call uses the SAME n_part, so the
 co-partitioning invariants (and the plan-audit exchange budgets) are
@@ -35,80 +33,15 @@ unaffected — only the constant changes.
 
 from __future__ import annotations
 
-import os
-from contextlib import contextmanager
-
 from pyspark.sql import SparkSession
 
 DEFAULT_ROWS_PER_PART = 64 * 1024
 
 
-@contextmanager
-def shuffle_scope(spark: SparkSession, n_part: int, disable_aqe: bool = True):
-    """Pin ``spark.sql.shuffle.partitions`` to the operator's adaptive
-    ``n_part`` for the duration of the call (restored on exit).
-
-    Why: the flat statics are explicitly repartitioned to ``n_part``, but
-    the loop's ENSURE_REQUIREMENTS exchanges (the per-round groupBy) take
-    their partition count from the session conf — a mismatch makes every
-    downstream join re-shuffle one side to the session default each round
-    (measured: a 1-exchange PageRank iteration plan became 5 exchanges /
-    9 AQE jobs). Pinning the conf to the same ``n_part`` restores the
-    designed plan: ONE map-side-combined exchange per round, every other
-    join co-partitioned. When ``n_part`` equals the configured ceiling
-    (any at-scale input) this is a no-op.
-
-    When the adaptive layout actually shrank below the configured ceiling
-    (small-data mode) AND ``disable_aqe`` is left True, AQE is
-    additionally disabled inside the scope: fixed-shape loop plans (one
-    exchange, co-partitioned statics, partition count already decided)
-    gain nothing from adaptive re-planning, which only splits each
-    materialization into one job per query stage — measured 77 -> 27 jobs
-    and ~13% wall on a 20-iteration PageRank. At scale
-    (n_part == ceiling) AQE stays on — its skew-join handling matters for
-    the setup joins there. Operators whose round plans have genuinely
-    data-dependent shapes (the CC star rounds: fresh distincts and
-    aggregations over a shrinking edge set, no co-partitioned statics)
-    pass ``disable_aqe=False`` — AQE's runtime coalescing wins there
-    (A/B: 3.5-4.7 s vs 4.6-5.0 s on the 112k-edge pipeline graph).
-
-    The conf is session-wide: concurrent queries submitted from other
-    driver threads during the scope see the same value. The engine's
-    operators are driver-sequential per call; the bowtie sweeps that DO
-    run concurrently share one operator family and the same n_part."""
-    key = "spark.sql.shuffle.partitions"
-    aqe_key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key)
-    prev_aqe = spark.conf.get(aqe_key)
-    shrunk = disable_aqe and int(n_part) < int(prev)
-    spark.conf.set(key, str(int(n_part)))
-    if shrunk:
-        spark.conf.set(aqe_key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
-        if shrunk:
-            spark.conf.set(aqe_key, prev_aqe)
-
-
-def rows_per_part(spark: SparkSession) -> int:
-    v = spark.conf.get("spark.graft.rowsPerPartition", None)
-    if v is None:
-        v = os.environ.get("SPARK_GRAFT_ROWS_PER_PART", "")
-    try:
-        n = int(v)
-        if n > 0:
-            return n
-    except (TypeError, ValueError):
-        pass
-    return DEFAULT_ROWS_PER_PART
-
-
-def pick_n_part(spark: SparkSession, n_rows: int | None) -> int:
+def pick_n_part(spark: SparkSession, n_rows: int) -> int:
     """Partition count for an operator whose dominant table has ``n_rows``
-    rows: ceil(n_rows / rows_per_part) clamped to [2, shuffle.partitions].
-    ``n_rows=None`` (unknown) returns the configured ceiling unchanged.
+    rows: ceil(n_rows / DEFAULT_ROWS_PER_PART) clamped to [2,
+    shuffle.partitions].
 
     The floor is 2, not 1: ``repartition(1, key)`` materializes as
     SinglePartition, which EnsureRequirements does not treat as
@@ -116,7 +49,5 @@ def pick_n_part(spark: SparkSession, n_rows: int | None) -> int:
     re-exchanged to the session default), while HashPartitioning(key, 2)
     keeps every loop join exchange-free."""
     ceiling = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    if n_rows is None:
-        return ceiling
-    want = -(-max(int(n_rows), 1) // rows_per_part(spark))
+    want = -(-max(int(n_rows), 1) // DEFAULT_ROWS_PER_PART)
     return min(ceiling, max(2, want))

@@ -1,9 +1,9 @@
 """Stats-safe eager localCheckpoint for iterative loops.
 
-Every iterative operator here materializes its per-round state with
-``repartition(key).localCheckpoint(eager=True)`` — the flat LogicalRDD
-preserves hash partitioning (co-partitioned loop joins stay exchange-free)
-and truncates RDD lineage (rationale in operators/pagerank.py).
+Every iterative operator materializes its per-round state with
+``repartition(n_part, key)`` + :func:`flat_checkpoint` (``Loop.step``,
+plans/loop.py) — the flat LogicalRDD preserves hash partitioning
+(co-partitioned loop joins stay exchange-free) and truncates RDD lineage.
 
 Measured hazard (pyspark 4.1.2): ``Dataset.checkpoint`` builds the flat
 LogicalRDD with ``originStats = Some(optimizedPlan.stats)`` — the
@@ -54,12 +54,7 @@ _LOGICAL_RDD = "org.apache.spark.sql.execution.LogicalRDD"
 _warned = False
 
 
-def flat_checkpoint(
-    df: DataFrame,
-    strict: Optional[bool] = None,
-    partition_cols: Optional[tuple[str, ...]] = None,
-    n_part: Optional[int] = None,
-) -> DataFrame:
+def flat_checkpoint(df: DataFrame, strict: Optional[bool] = None) -> DataFrame:
     """``df.localCheckpoint(eager=True)`` with origin stats/constraints
     stripped (module docstring). Drop-in replacement for the call sites in
     iterative loops.
@@ -69,16 +64,15 @@ def flat_checkpoint(
     RuntimeError instead of silently reverting to the plain checkpoint
     whose compounding-stats hazard this module exists to close.
 
-    ``partition_cols``/``n_part`` — stamp ``HashPartitioning(cols, n)`` on
-    the rebuilt LogicalRDD (use :func:`flat_repart` rather than passing
-    these directly). Measured hazard #2 (pyspark 4.1.2, AQE on): when the
-    checkpointed plan is adaptive, ``Dataset.localCheckpoint`` captures
+    Measured hazard #2 (pyspark 4.1.2, AQE on): when the checkpointed plan
+    is adaptive, ``Dataset.localCheckpoint`` captures
     ``UnknownPartitioning(0)`` instead of the exchange's hash partitioning,
     so every downstream co-partitioned join/aggregation silently re-shuffles
     BOTH sides — with AQE enabled the whole one-exchange-per-iteration
-    design was paying ~6 exchanges per round. The stamp is sound exactly
-    when the checkpointed df ends in ``repartition(n, cols)``: that is a
-    REPARTITION_BY_NUM shuffle whose partition count AQE never rewrites,
+    design was paying ~6 exchanges per round. When ``df``'s plan root is
+    ``repartition(n, cols)``, the rebuilt LogicalRDD is re-stamped with
+    that node's ``HashPartitioning(cols, n)``. The stamp is sound: that is
+    a REPARTITION_BY_NUM shuffle whose partition count AQE never rewrites,
     so the materialized RDD's layout IS murmur3-hash(cols, n)."""
     ck = df.localCheckpoint(eager=True)
     if strict is None:
@@ -98,18 +92,7 @@ def flat_checkpoint(
             return ck
         none = getattr(getattr(jvm.scala, "None$"), "MODULE$")
         partitioning = node.outputPartitioning()
-        if partition_cols and n_part:
-            out = node.output()
-            by_name = {}
-            for i in range(out.size()):
-                a = out.apply(i)
-                by_name[a.name()] = a
-            exprs = [by_name[c] for c in partition_cols]
-            seq = jvm.PythonUtils.toSeq(exprs)
-            partitioning = jvm.org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
-                seq, int(n_part)
-            )
-        elif partitioning.getClass().getSimpleName().startswith("UnknownPartitioning"):
+        if partitioning.getClass().getSimpleName().startswith("UnknownPartitioning"):
             # AQE-partitioning recovery (docstring): when the source df's
             # plan root is repartition(n, cols) — a REPARTITION_BY_NUM
             # exchange whose partition count AQE never rewrites — the
@@ -170,19 +153,3 @@ def flat_checkpoint(
             )
         return ck
 
-
-def flat_repart(
-    df: DataFrame, n_part: int, *cols: str, strict: Optional[bool] = None
-) -> DataFrame:
-    """``repartition(n_part, *cols)`` + :func:`flat_checkpoint`, with the
-    resulting LogicalRDD stamped ``HashPartitioning(cols, n_part)`` so the
-    layout survives AQE (see flat_checkpoint docstring). This is THE way
-    iterative operators materialize loop state and statics: downstream
-    joins/aggregations keyed on ``cols`` with the same ``n_part`` are
-    exchange-free under both AQE settings."""
-    return flat_checkpoint(
-        df.repartition(n_part, *cols),
-        strict=strict,
-        partition_cols=cols,
-        n_part=n_part,
-    )
